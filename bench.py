@@ -42,10 +42,9 @@ item 4: the single-shot face JSON contradicted the repo's quiet-window
 minima two rounds running — the default is now min-of-3.)
 
 Stage barriers: every heavy materialization goes through
-plans/snapshots.snapshot() — localCheckpoint by default after the round-5
-interleaved A/B vs a disk-parquet barrier (checkpoint won the core suite
-68.3 s vs 104.0 s at local[16]; BENCH_APPENDIX.md); override with
-SPARK_GRAFT_BARRIER=parquet.
+plans/snapshots.snapshot() (localCheckpoint). Each round's spatial
+snapshots are released when the round ends, so block-manager memory does
+not grow with the round count.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default 32).
@@ -82,10 +81,7 @@ from osm_jigsaw_spark.operators.containment import (  # noqa: E402
 from osm_jigsaw_spark.operators.geocode import geocode  # noqa: E402
 from osm_jigsaw_spark.operators.tiling import tile_assignments  # noqa: E402
 from osm_jigsaw_spark.plans.pipeline import run_pipeline  # noqa: E402
-from osm_jigsaw_spark.plans.snapshots import (  # noqa: E402
-    DEFAULT_MODE,
-    snapshot,
-)
+from osm_jigsaw_spark.plans.snapshots import release, snapshot  # noqa: E402
 from osm_jigsaw_spark.session import get_spark  # noqa: E402
 
 
@@ -141,14 +137,21 @@ def main():
          / 65536.0 * 240.0).alias("lon"),
     ), "pts")
 
+    round_snaps: list = []
+
+    def keep(key: str, snap):
+        """Store a spatial snapshot; it is released when the round ends."""
+        round_snaps.append(snap)
+        state[key] = snap
+        return snap
+
     for _ in range(rounds):
         def f_pipeline():
             # scaled_documents_df emits only way+node docs — skip the
             # ~10-stage relation sub-plan via the caller hint (lazy, no
             # isEmpty() probe job; ADVICE r1)
             pipe = run_pipeline(docs, cache=False, has_relations=False)
-            state["areas"] = snapshot(pipe.areas, "areas")
-            n = state["areas"].count()
+            n = keep("areas", snapshot(pipe.areas, "areas")).count()
             return {"n_areas": n}
 
         timed("pipeline_areas", f_pipeline)
@@ -159,16 +162,17 @@ def main():
         # geocode and kNN consumers — the architecture a 100 TB run uses
         # (index = an Iceberg-snapshot artifact, not a per-query rebuild)
         def f_cell_index():
-            state["idx"] = snapshot(area_cell_index(areas), "idx")
-            return {"n_index_cells": state["idx"].count()}
+            idx = keep("idx", snapshot(area_cell_index(areas), "idx"))
+            return {"n_index_cells": idx.count()}
 
         timed("cell_index", f_cell_index)
         idx = state["idx"]
 
         def f_containment():
-            pairs = snapshot(contains_pairs(areas, idx=idx), "pairs")
-            state["edges"] = snapshot(graph_edges(areas, pairs), "edges")
-            n = state["edges"].count()
+            pairs = keep("pairs",
+                         snapshot(contains_pairs(areas, idx=idx), "pairs"))
+            n = keep("edges",
+                     snapshot(graph_edges(areas, pairs), "edges")).count()
             return {
                 "containment_areas_per_sec": 0.0,  # filled below
                 "n_edges": n,
@@ -207,6 +211,12 @@ def main():
         timed("minhash_scaled", f_minhash_scaled)
         timed("cosine_scaled", f_cosine_scaled)
 
+        # outside every timed region: clearCache() does not free
+        # localCheckpoint blocks, so without this each round adds its own
+        for snap in round_snaps:
+            release(snap)
+        round_snaps.clear()
+
     extra["containment_areas_per_sec"] = round(
         extra["n_areas"] / timings["containment_graph"], 1)
     extra["geocode_lookups_per_sec"] = round(
@@ -224,7 +234,6 @@ def main():
         "rounds": rounds,
         "reps": reps,
         "n_docs": n_docs,
-        "barrier": os.environ.get("SPARK_GRAFT_BARRIER", DEFAULT_MODE),
         "extra": extra,
     }))
 

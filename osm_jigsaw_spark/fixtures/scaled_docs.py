@@ -99,16 +99,19 @@ def hot_node_rects(spark: SparkSession, n_areas: int) -> DataFrame:
     n_areas-1 mutually disjoint small rects — so the mega is the DIRECT
     parent of every other area, the reference's >100k-children hot node
     (root README.md:159-161) taken to the limit. Disjoint small rects:
-    a 720x320 grid of 0.25°-wide cells, each rect inset 20%."""
+    a 720x320 grid of 0.5°-wide cells, one rect per cell inset 10% of the
+    cell on each side, so n_areas is capped at 720*320 + 1; larger worlds
+    raise ValueError. The mega spans every longitude so the edge columns
+    are inside it too."""
     grid_x, grid_y = 720, 320
+    if n_areas - 1 > grid_x * grid_y:
+        raise ValueError(f"hot_node_rects holds at most {grid_x * grid_y + 1}"
+                         f" areas, got {n_areas}")
     df = spark.range(n_areas - 1).select(F.col("id").alias("k"))
     df = df.withColumn("gx", F.col("k") % grid_x)
-    df = df.withColumn("gy", (F.col("k") / grid_x).cast("long") % grid_y)
-    # >1 area per grid cell only above 230k areas; keep rects disjoint by
-    # shrinking repeats into nested insets (still strictly inside the cell)
-    df = df.withColumn("rep", (F.col("k") / (grid_x * grid_y)).cast("long"))
+    df = df.withColumn("gy", (F.col("k") / grid_x).cast("long"))
     cw = F.lit(0.5)  # cell width/height in degrees
-    inset = (F.lit(0.1) + F.col("rep") * 0.02) * cw
+    inset = F.lit(0.1) * cw
     small = df.select(
         (F.col("k") + 1).alias("area_idx"),
         F.round(F.lit(-80.0) + F.col("gy") * cw + inset, 6).alias("min_lat"),
@@ -119,7 +122,7 @@ def hot_node_rects(spark: SparkSession, n_areas: int) -> DataFrame:
         .alias("max_lon"),
     )
     mega = spark.createDataFrame(
-        [(0, -89.0, -179.9, 89.0, 179.9)],
+        [(0, -89.0, -180.0, 89.0, 180.0)],
         "area_idx long, min_lat double, min_lon double, "
         "max_lat double, max_lon double")
     return mega.unionByName(small)

@@ -112,9 +112,8 @@ def hashed_shingle_arrays(documents: DataFrame,
     the Iceberg write volume; (b) the md5 chain runs exactly once per
     shingle, not once per downstream consumer branch (the LSH band
     self-join does NOT share its exchange — the signature subtree runs
-    per branch); (c) the verification join keys on longs, not strings.
-    Interleaved warm A/B at 600k docs, local[16], 3 reps: string-array
-    barrier 86-108 s, this 17-29 s, identical 5,988 output pairs.
+    per branch); (c) the verification join keys on longs, not strings
+    (A/B figures: minhash_near_duplicates).
 
     Distinctness carries over from the string dedup: a 60-bit collision
     WITHIN one doc (~n²/2^61, ~1e-14 at 300 shingles) is the only way
@@ -127,7 +126,6 @@ def hashed_shingle_arrays(documents: DataFrame,
 
 
 def minhash_signatures(documents: DataFrame,
-                       sh_arrays: DataFrame | None = None,
                        h_arrays: DataFrame | None = None) -> DataFrame:
     """(doc_id, sigs array<long> of length MINHASH_K).
 
@@ -142,29 +140,26 @@ def minhash_signatures(documents: DataFrame,
     CollapseProject inline (= recompute) the hash array K times.
     a*h < P^2 < 2^62 stays in int64.
 
-    Pass h_arrays (hashed_shingle_arrays output) to sign pre-hashed
-    longs — the md5 chain is then absent from this plan entirely and the
-    permutation folds over `h % P` per element (bit-identical: the string
-    path hashes with the same hash60 before reducing mod P)."""
+    The input is the hashed shingle arrays: pass h_arrays (an already
+    materialized hashed_shingle_arrays table) and the md5 chain is absent
+    from this plan entirely; without it they are derived from documents.
+    The permutation folds over `h % P` per element."""
     params = F.array(*[
         F.struct(F.lit(a).cast("long").alias("a"),
                  F.lit(b).cast("long").alias("b"))
         for _j, a, b in minhash_params()
     ])
     init = F.array(*[F.lit(P).cast("long")] * MINHASH_K)
-    if h_arrays is not None:
-        src, col = h_arrays, "hshingles"
-        hs = F.transform(col, lambda h: h % P)
-    else:
-        src, col = (sh_arrays if sh_arrays is not None
-                    else shingle_arrays(documents)), "shingles"
-        hs = F.transform(col, lambda s: hash60(s) % P)
+    if h_arrays is None:
+        h_arrays = hashed_shingle_arrays(documents)
+    hs = F.transform("hshingles", lambda h: h % P)
     sigs = F.aggregate(
         hs, init,
         lambda acc, h: F.zip_with(
             acc, params, lambda m, p: F.least(m, (p["a"] * h + p["b"]) % P)),
     )
-    return src.filter(F.size(col) > 0).select("doc_id", sigs.alias("sigs"))
+    return (h_arrays.filter(F.size("hshingles") > 0)
+            .select("doc_id", sigs.alias("sigs")))
 
 
 LSH_MAX_BUCKET = 1024  # per-(band,key) candidate cap — no O(n²) blowup
@@ -192,8 +187,7 @@ def _minhash_bands(signatures: DataFrame) -> DataFrame:
 
 
 def lsh_candidates(signatures: DataFrame,
-                   max_bucket: int = LSH_MAX_BUCKET,
-                   materialize: bool = False) -> DataFrame:
+                   max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(doc_a, doc_b) pairs sharing ≥1 LSH band.
 
     Buckets larger than max_bucket are excluded before the self-join: a
@@ -207,11 +201,8 @@ def lsh_candidates(signatures: DataFrame,
     do NOT share that exchange (no ReusedExchange in the physical plan —
     the branch subtrees differ after the rename), so the signature subtree
     runs once per branch. With `signatures` built from a materialized
-    shingle table (minhash_near_duplicates' structure) that costs ~nothing
-    extra; if you pass an UNmaterialized signature plan whose lineage
-    includes the split+md5 chain, set materialize=True to checkpoint the
-    capped band table (skinny (doc_id, band, key) rows) before the
-    self-join instead of paying the chain twice."""
+    hashed shingle table (minhash_near_duplicates' structure) that costs
+    ~nothing extra."""
     from pyspark.sql import Window
     bands = _minhash_bands(signatures)
     w = Window.partitionBy("band", "key")
@@ -219,8 +210,6 @@ def lsh_candidates(signatures: DataFrame,
                .withColumn("bucket_n", F.count("*").over(w))
                .filter(F.col("bucket_n") <= max_bucket)
                .select("doc_id", "band", "key"))
-    if materialize:
-        flagged = flagged.localCheckpoint(eager=True)
     other = flagged.select(
         F.col("doc_id").alias("doc_b"), F.col("band"), F.col("key"))
     return (
@@ -240,39 +229,24 @@ def lsh_oversized_buckets(signatures: DataFrame,
             .filter(F.col("bucket_n") > max_bucket))
 
 
-def jaccard_verify(documents: DataFrame, pairs: DataFrame,
-                   threshold: float = 0.5,
-                   sh_arrays: DataFrame | None = None,
-                   h_arrays: DataFrame | None = None) -> DataFrame:
+def jaccard_verify(h_arrays: DataFrame, pairs: DataFrame,
+                   threshold: float = 0.5) -> DataFrame:
     """(doc_a, doc_b, jaccard) — exact shingle-set Jaccard over candidate
-    pairs only.
+    pairs only, from the materialized hashed shingle arrays.
 
-    The docs are semi-joined down to those that appear in a candidate pair
-    BEFORE shingling/exploding — candidates are rare by construction (LSH
-    banding), so the split+md5 chain re-runs only for candidate docs and
-    every downstream shuffle is candidate-sized, never corpus-sized. At
-    100 TB this is the difference between re-shuffling (or re-hashing) the
-    corpus and a few thousand docs. Passing sh_arrays (or h_arrays — the
-    hashed representation; the intersection join then keys on 8-byte
-    longs instead of shingle strings) reuses an already-materialized
-    per-doc shingle table (pruned the same way)."""
+    The arrays are semi-joined down to the docs that appear in a candidate
+    pair BEFORE exploding — candidates are rare by construction (LSH
+    banding), so every downstream shuffle is candidate-sized, never
+    corpus-sized, and the intersection join keys on 8-byte longs."""
     docs_needed = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    if h_arrays is not None:
-        pruned, col = h_arrays, "hshingles"
-    elif sh_arrays is not None:
-        pruned, col = sh_arrays, "shingles"
-    else:
-        pruned, col = shingle_arrays(
-            documents.join(F.broadcast(docs_needed), "doc_id", "left_semi")
-        ), "shingles"
-    pruned = pruned.join(F.broadcast(docs_needed), "doc_id", "left_semi")
-    sh = pruned.select("doc_id", F.explode(col).alias("shingle"))
+    pruned = h_arrays.join(F.broadcast(docs_needed), "doc_id", "left_semi")
+    sh = pruned.select("doc_id", F.explode("hshingles").alias("shingle"))
     sizes = pruned.select(
-        "doc_id", F.size(col).cast("long").alias("n"))
+        "doc_id", F.size("hshingles").cast("long").alias("n"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -311,26 +285,16 @@ def minhash_near_duplicates(documents: DataFrame,
       can wedge the broadcast exchange altogether. They are tiny by
       construction; checkpointing them is free.
 
-    This structure was re-litigated twice this round (VERDICT r3 asked
-    whether the arrays barrier could go), interleaved warm A/B at 600k
-    docs, local[16]: two checkpoints over STRING shingle arrays 18-23 s
-    clean / 86-108 s under load; dropping the arrays barrier and
-    computing signatures inline 40 s (the signature subtree, split+md5
-    included, runs once per un-shared self-join branch); persist()
-    instead of localCheckpoint 119 s (InMemoryRelation's columnar
-    encoding of nested string arrays dominates); a third barrier on the
-    capped band table 19.5 s (no win); checkpointing HASHED shingles
-    (hashed_shingle_arrays — the structure below) 17-29 s in the same
-    windows where strings took 86-108 s, identical output pairs: the
-    snapshot shrinks to 8-byte longs and the md5 chain leaves every
-    downstream branch. The barriers are constant-COUNT (not
-    data-dependent jobs), so they are not a scale-killer; they are the
-    price of cutting the expensive subtree out of every downstream
-    branch."""
+    Measured against the alternatives (interleaved warm A/B, 600k docs,
+    local[16], identical output pairs; BENCH_APPENDIX.md): barriers over
+    STRING shingle arrays 86-108 s under load, signatures inline with no
+    arrays barrier 40 s, persist() instead of localCheckpoint 119 s, a
+    third barrier on the capped band table 19.5 s, this structure 17-29 s.
+    The barriers are constant-count jobs, not data-dependent ones."""
     harr = snapshot(hashed_shingle_arrays(documents), "harr")
     sigs = minhash_signatures(documents, h_arrays=harr)
     cands = snapshot(lsh_candidates(sigs), "cands")
-    return jaccard_verify(documents, cands, threshold, h_arrays=harr)
+    return jaccard_verify(harr, cands, threshold)
 
 
 def simhash_signatures(documents: DataFrame) -> DataFrame:

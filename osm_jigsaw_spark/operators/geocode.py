@@ -14,10 +14,10 @@ Batch formulation (points is a DataFrame — one query or millions):
    shared exploded covering index (operators/containment.area_cell_index);
 2. bbox check columnar, then Arrow-vectorized boundary-inclusive PIP
    (reference app/areas/AreaComparison.scala:14-46 semantics);
-3. paths: iterative frontier join over graph_edges restricted to containing
-   areas — every area containing the point has all its ancestors containing
-   it too, so the induced subgraph's root-to-leaf chains are exactly the
-   reference's descent output.
+3. paths: graph_edges restricted to containing areas, enumerated per point
+   in one Arrow pass — every area containing the point has all its
+   ancestors containing it too, so the induced subgraph's root-to-leaf
+   chains are exactly the reference's descent output.
 """
 
 from __future__ import annotations
@@ -66,64 +66,6 @@ def areas_containing_points(areas: DataFrame, points: DataFrame,
     return hit.select(
         "point_id", "lat", "lon", "area_key", "canonical_osm_id", "area"
     )
-
-
-def geocode_paths(edges: DataFrame, containing: DataFrame,
-                  max_depth: int = 64) -> DataFrame:
-    """All root-to-leaf paths per point through the containing-area subgraph.
-
-    Output: (point_id, path array<string> of canonical osm_ids root-first,
-    path_keys array<string>). Points inside no area produce no rows
-    (reference returns an empty path list).
-    """
-    pe = point_edges(edges, containing).localCheckpoint(eager=True)
-    # renamed copies avoid self-join ambiguity in the iterative loop
-    pe_b = pe.select(
-        F.col("point_id").alias("b_point_id"),
-        F.col("parent_key").alias("b_parent_key"),
-        F.col("child_key").alias("b_child_key"),
-        F.col("child_osm_id").alias("b_child_osm_id"),
-    )
-    parents = pe.select(
-        F.col("point_id").alias("tp"), F.col("parent_key").alias("tn")
-    ).distinct().localCheckpoint(eager=True)
-
-    frontier = (
-        pe.filter(F.col("parent_key") == ROOT_ID)
-        .select(
-            "point_id",
-            F.col("child_key").alias("node"),
-            F.array(F.col("child_osm_id")).alias("path"),
-            F.array(F.col("child_key")).alias("path_keys"),
-        )
-    )
-    results = None
-    for _ in range(max_depth):
-        if frontier.isEmpty():
-            break
-        frontier = frontier.localCheckpoint(eager=True)
-        ext = frontier.join(
-            pe_b, (frontier["point_id"] == pe_b["b_point_id"])
-            & (frontier["node"] == pe_b["b_parent_key"]),
-        ).select(
-            frontier["point_id"],
-            F.col("b_child_key").alias("node"),
-            F.array_append(frontier["path"], F.col("b_child_osm_id")).alias("path"),
-            F.array_append(frontier["path_keys"], F.col("b_child_key")).alias("path_keys"),
-        )
-        # terminal rows: no outgoing edge for (point, node)
-        terminals = frontier.join(
-            parents,
-            (frontier["point_id"] == parents["tp"]) & (frontier["node"] == parents["tn"]),
-            "left_anti",
-        ).select("point_id", "path", "path_keys")
-        results = terminals if results is None else results.unionByName(terminals)
-        frontier = ext
-    if results is None:
-        spark = edges.sparkSession
-        return spark.createDataFrame(
-            [], "point_id string, path array<string>, path_keys array<string>")
-    return results
 
 
 def point_edges(edges: DataFrame, containing: DataFrame) -> DataFrame:
@@ -212,18 +154,15 @@ def geocode_paths_grouped(edges: DataFrame, containing: DataFrame) -> DataFrame:
 
 
 def geocode(areas: DataFrame, edges: DataFrame, points: DataFrame,
-            grouped: bool = True, idx: DataFrame | None = None) -> DataFrame:
-    """points(point_id, lat, lon) → (point_id, path) rows.
-
-    grouped=True (default): single-pass grouped enumeration (fast path).
-    grouped=False: the level-iterated join formulation (kept for parity
-    testing; same output). `idx`: optional shared area_cell_index."""
+            idx: DataFrame | None = None) -> DataFrame:
+    """points(point_id, lat, lon) → (point_id, path, path_keys): every
+    root-to-leaf path through the areas containing the point, root-first,
+    as canonical osm_ids (path) and area keys (path_keys). Points inside
+    no area produce no rows (the reference returns an empty path list).
+    `idx`: optional shared area_cell_index."""
     # materialize once: `containing` feeds three join branches (child
     # membership, parent membership, path grouping) — without this the
-    # candidate join + PIP would re-run per consumer (localCheckpoint
-    # barrier, the measured round-5 A/B winner — plans/snapshots.py)
+    # candidate join + PIP would re-run per consumer
     containing = snapshot(
         areas_containing_points(areas, points, idx=idx), "containing")
-    if grouped:
-        return geocode_paths_grouped(edges, containing)
-    return geocode_paths(edges, containing)
+    return geocode_paths_grouped(edges, containing)

@@ -17,12 +17,16 @@ per-partition lineage and metrics"): every stage writes
 `run_stage` skips recomputation when a _SUCCESS.json with a matching
 fingerprint exists (resume), else computes, writes, and records metrics.
 Fingerprints chain: a stage's fingerprint hashes its name, the declared
-code version, and its inputs' fingerprints — editing an upstream stage
-invalidates everything downstream, nothing else.
+code version, a hash of the package source, and its inputs' fingerprints
+— editing an upstream stage invalidates everything downstream, and editing
+any operator invalidates every stage, so a resume never reuses output
+computed by older code.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
 import hashlib
 import json
 import os
@@ -31,6 +35,21 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_PKG = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@functools.cache
+def source_hash() -> str:
+    """md5 over the path and bytes of every osm_jigsaw_spark/**/*.py,
+    computed once per process."""
+    h = hashlib.md5()
+    for path in sorted(glob.glob(os.path.join(_PKG, "**", "*.py"),
+                                 recursive=True)):
+        h.update(os.path.relpath(path, _PKG).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
 
 
 @dataclass
@@ -52,7 +71,7 @@ class CheckpointedPipeline:
 
     def _fingerprint(self, name: str, inputs: list[str]) -> str:
         h = hashlib.md5()
-        h.update(f"{name}:{self.version}".encode())
+        h.update(f"{name}:{self.version}:{source_hash()}".encode())
         for i in inputs:
             h.update(self.stages[i].fingerprint.encode())
         return h.hexdigest()

@@ -1,86 +1,32 @@
-"""Stage-barrier materialization: disk-parquet snapshot vs localCheckpoint.
+"""Stage-barrier materialization via localCheckpoint.
 
 Heavy pipeline stages need a materialization barrier: the stage result
-feeds multiple downstream branches that do not share exchanges (left lazy,
-the subtree re-executes once per branch), and on a cluster the stage IS an
-Iceberg snapshot — the resume point the north rule mandates. Two barrier
-mechanisms exist and they are NOT equivalent at high parallelism:
-
-- ``localCheckpoint(eager=True)``: partitions serialize into the executor
-  block manager. In local mode there is ONE shared block manager, and the
-  round-4 pipeline decomposition (BENCH_APPENDIX.md) measured its snapshot
-  write ANTI-scaling — 3.76 s at local[4] -> 6.84 s at local[16] for the
-  same bytes (16 writers contending on one BlockManager + one memory bus).
-- parquet snapshot (this module's alternative): write the stage to a temp
-  parquet directory and read it back — per-partition parallel file writes
-  through the OS page cache with no shared lock, the same architecture as
-  the resumable stage writer (plans/checkpoints.py:80).
-
-Round-5 interleaved A/B (tools/ab_snapshot.py, 3 rounds x both modes x
-local[4]/local[16] at 600k areas; table in BENCH_APPENDIX.md) measured
-CHECKPOINT as the overall winner — core suite total 68.3 s vs parquet's
-104.0 s at local[16], and faster on every spatial query at both levels
-(pipeline_areas 14.6 vs 27.8, containment 17.6 vs 33.2). The round-4
-hypothesis (parquet fixes the 0.55x block-manager write anti-scaling) is
-REFUTED for this engine's payloads: a barrier is consumed by several
-downstream branches, and each consumption re-decodes parquet's nested
-geometry arrays (repetition levels + compression) — repeated codec CPU
-that exceeds what the contended write costs, while localCheckpoint serves
-re-reads from block-manager memory. minhash_scaled is the one query where
-parquet measured faster (30.4 vs 37.9 s at local[4]; 3.6% apart at
-local[16]) — flat 8-byte-long barriers are codec-cheap — but the suite
-mode also switches the input-fixture barriers, so the attribution is
-confounded and not worth a per-site split. ``checkpoint`` is therefore
-the default; ``SPARK_GRAFT_BARRIER=parquet`` selects the alternative for
-A/Bs. On a real cluster the contention term vanishes (per-executor block
-managers), favoring checkpoint further; DURABLE resume points remain
-parquet via plans/checkpoints.py — a different artifact with a different
-job (survive the JVM), not the intra-job barrier this module provides.
-
-Reference analog: the Scala pipeline chains stages through protobuf files
-on disk between JVMs (go.bash:9-17) — the parquet barrier is the same
-architecture inside one session.
+feeds several downstream branches that do not share exchanges (left lazy,
+the subtree re-executes once per branch), and on a cluster the stage is an
+Iceberg snapshot. The barrier is ``localCheckpoint(eager=True)``. A temp
+parquet write+read barrier was measured against it (interleaved A/B, 600k
+areas, local[4] and local[16]) and lost the core suite 104.0 s vs 68.3 s
+at local[16]: a barrier is read by several branches, and each read
+re-decodes parquet's nested geometry arrays, while localCheckpoint serves
+re-reads from block-manager memory (BENCH_APPENDIX.md). Durable resume
+points that must survive the JVM are parquet via plans/checkpoints.py.
 """
 
 from __future__ import annotations
 
-import atexit
-import itertools
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame
 
-DEFAULT_MODE = "checkpoint"
-_ENV = "SPARK_GRAFT_BARRIER"
 
-_root: str | None = None
-_seq = itertools.count()
-
-
-def _snap_root() -> str:
-    global _root
-    if _root is None:
-        _root = tempfile.mkdtemp(prefix="osm-jigsaw-snap-")
-        atexit.register(shutil.rmtree, _root, True)
-    return _root
+def snapshot(df: DataFrame, name: str = "snap") -> DataFrame:
+    """Materialize ``df`` into the block manager and return a barrier over
+    its rows. ``name`` labels the barrier for callers that observe it."""
+    return df.localCheckpoint(eager=True)
 
 
-def snapshot(df: DataFrame, name: str = "snap",
-             mode: str | None = None) -> DataFrame:
-    """Materialize ``df`` and return a re-readable barrier over its rows.
+def release(snap: DataFrame) -> None:
+    """Free the block-manager partitions behind a ``snapshot`` result.
 
-    mode: "checkpoint" (default; localCheckpoint into the block manager —
-    the measured round-5 A/B winner, see module docstring) or "parquet"
-    (temp-dir parquet write+read, per-partition parallel file I/O).
-    Resolved from $SPARK_GRAFT_BARRIER when not passed.
-    """
-    mode = mode or os.environ.get(_ENV, DEFAULT_MODE)
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=True)
-    if mode != "parquet":
-        raise ValueError(f"unknown barrier mode {mode!r}")
-    path = os.path.join(_snap_root(), f"{name}-{next(_seq)}")
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    ``DataFrame.unpersist`` does not reach them (the checkpointed RDD is not
+    registered with the cache manager, pyspark 4.1), so this unpersists the
+    RDD under the snapshot's LogicalRDD. The snapshot is unreadable after."""
+    snap._jdf.queryExecution().logical().rdd().unpersist(True)

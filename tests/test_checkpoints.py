@@ -50,3 +50,17 @@ def test_version_bump_invalidates_downstream(spark, docs, cp_root):
     # and the new fingerprints were persisted: a re-run at v2 resumes
     cp2 = run_checkpointed(spark, docs, cp_root, version="2")
     assert all(cp2.stages[s].resumed for s in STAGES)
+
+
+def test_source_edit_invalidates_every_stage(spark, docs, cp_root,
+                                             monkeypatch):
+    """A resume never reuses a stage computed by older code: any change to
+    the package source changes every fingerprint."""
+    from osm_jigsaw_spark.plans import checkpoints
+
+    run_checkpointed(spark, docs, cp_root)  # stages current for this source
+    monkeypatch.setattr(checkpoints, "source_hash", lambda: "edited")
+    cp = run_checkpointed(spark, docs, cp_root)
+    assert all(not cp.stages[s].resumed for s in STAGES)
+    cp2 = run_checkpointed(spark, docs, cp_root)
+    assert all(cp2.stages[s].resumed for s in STAGES)

@@ -3,6 +3,8 @@
 from pyspark.sql import functions as F
 
 from osm_jigsaw_spark.functions.cells import geohash_encode_np
+from osm_jigsaw_spark.functions.geometry import points_in_ring
+from osm_jigsaw_spark.operators.containment import ROOT_ID
 from osm_jigsaw_spark.operators.geocode import geocode
 from osm_jigsaw_spark.operators.knn import knn_areas
 from osm_jigsaw_spark.operators.tiling import tile_assignments, tile_counts
@@ -102,19 +104,59 @@ def test_write_tiled_segments(spark, pipeline, tmp_path):
     assert pruned.count() == expect
 
 
-def test_geocode_grouped_vs_iterated_parity(pipeline, qpoints):
-    """The two path-enumeration formulations — single-pass grouped
-    mapInPandas (the fast path) and the level-iterated join variant
-    (geocode.geocode_paths) — must produce identical row multisets, so the
-    formulations cannot drift (VERDICT r3 next-round item 8)."""
-    fast = geocode(pipeline.areas, pipeline.graph_edges, qpoints,
-                   grouped=True)
-    slow = geocode(pipeline.areas, pipeline.graph_edges, qpoints,
-                   grouped=False)
+def test_geocode_matches_brute_force(spark, pipeline, qpoints):
+    """Differential check against code that shares nothing with the engine:
+    containing areas from the numpy ring test (points_in_ring, not the
+    engine's cell join + pip_col), paths from a plain-Python DFS over the
+    collected graph_edges restricted to those areas. Points: the fixture's
+    query points, a seeded jittered grid over the world's bbox, and seeded
+    points in every area's bbox (the world's polygons are small, so the
+    grid alone rarely lands where a bbox and its ring disagree)."""
+    areas = pipeline.areas.select(
+        "ring_hash", "canonical_osm_id", "lats", "lons", "bbox").collect()
+    edges = pipeline.graph_edges.collect()
 
-    def norm(df):
-        return sorted(
-            (r["point_id"], tuple(r["path"]), tuple(r["path_keys"]))
-            for r in df.collect())
+    rng = np.random.default_rng(7)
+    lat0 = min(a.bbox.min_lat for a in areas)
+    lat1 = max(a.bbox.max_lat for a in areas)
+    lon0 = min(a.bbox.min_lon for a in areas)
+    lon1 = max(a.bbox.max_lon for a in areas)
+    n = 14  # 196 grid points, one per cell at a seeded offset
+    grid = [
+        (f"g{i}_{j}",
+         float(lat0 + (i + rng.random()) * (lat1 - lat0) / n),
+         float(lon0 + (j + rng.random()) * (lon1 - lon0) / n))
+        for i in range(n) for j in range(n)]
+    in_bbox = [
+        (f"a{i}_{j}", float(rng.uniform(a.bbox.min_lat, a.bbox.max_lat)),
+         float(rng.uniform(a.bbox.min_lon, a.bbox.max_lon)))
+        for i, a in enumerate(areas) for j in range(8)]
+    points = ([(r.point_id, r.lat, r.lon) for r in qpoints.collect()]
+              + grid + in_bbox)
 
-    assert norm(fast) == norm(slow)
+    py = np.array([p[1] for p in points])
+    px = np.array([p[2] for p in points])
+    inside = {a.ring_hash: points_in_ring(
+        py, px, np.array(a.lats), np.array(a.lons)) for a in areas}
+    children = {}
+    for e in edges:
+        children.setdefault(e.parent_key, []).append(
+            (e.child_key, e.child_osm_id))
+
+    expected = []
+    for k, (pid, _lat, _lon) in enumerate(points):
+        def dfs(node, path, keys):
+            kids = [(c, o) for c, o in children.get(node, [])
+                    if inside[c][k]]
+            if not kids and keys:
+                expected.append((pid, tuple(path), tuple(keys)))
+            for c, o in kids:
+                dfs(c, path + [o], keys + [c])
+        dfs(ROOT_ID, [], [])
+
+    pts_df = spark.createDataFrame(
+        points, "point_id string, lat double, lon double")
+    got = [(r.point_id, tuple(r.path), tuple(r.path_keys)) for r in geocode(
+        pipeline.areas, pipeline.graph_edges, pts_df).collect()]
+    assert {pid[0] for pid, _p, _k in expected} >= {"g", "a"}
+    assert sorted(got) == sorted(expected)

@@ -248,9 +248,9 @@ class Provenance:
 
 
 def run(cpus: int, n_areas: int, reps: int) -> dict:
-    # Workload fully pinned (ADVICE r4): docs count, sf dir, and barrier
-    # mode are forced so an ambient override can never record core-series
-    # rows whose minima would merge incomparable workloads. `reps` runs as
+    # Workload fully pinned (ADVICE r4): docs count and sf dir are forced
+    # so an ambient override can never record core-series rows whose
+    # minima would merge incomparable workloads. `reps` runs as
     # SUITE rounds (min per query across full suite passes — decorrelates
     # from the host's multi-minute noise bursts better than back-to-back
     # in-place reps).
@@ -262,7 +262,6 @@ def run(cpus: int, n_areas: int, reps: int) -> dict:
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.1",
                SPARK_GRAFT_BENCH_ROUNDS=str(reps),
                SPARK_GRAFT_BENCH_REPS="1")
-    env.pop("SPARK_GRAFT_BARRIER", None)  # bench uses the engine default
     out = subprocess.run(
         [sys.executable, "bench.py"], env=env, capture_output=True,
         text=True, timeout=5400, check=True,
@@ -302,7 +301,6 @@ def main():
                                 "series": "core", "n_areas": n_areas,
                                 "sf": r.get("sf", 0.1),
                                 "docs": r.get("n_docs", n_areas),
-                                "barrier": r.get("barrier"),
                                 "queries": r["queries"],
                                 "extra": r["extra"]}) + "\n")
 
@@ -339,17 +337,15 @@ def main():
         if not cur:
             return None
         # Workload comparability filter (ADVICE r4): minima merge only
-        # across rows measuring the same testdata scale factor, docs
-        # count, and barrier mode as the newest current-fp row (fields
-        # absent on pre-round-5 rows default to that row's values — those
-        # rows are already excluded by fingerprint qualification).
+        # across rows measuring the same testdata scale factor and docs
+        # count as the newest current-fp row (fields absent on pre-round-5
+        # rows default to that row's values — those rows are already
+        # excluded by fingerprint qualification).
         ref = cur[-1]
         rows = [h for h in rows
                 if h.get("sf", ref.get("sf", 0.1)) == ref.get("sf", 0.1)
                 and h.get("docs", ref.get("docs", size))
-                == ref.get("docs", size)
-                and h.get("barrier", ref.get("barrier"))
-                == ref.get("barrier")]
+                == ref.get("docs", size)]
         qmins: dict[str, float] = {}
         qn: dict[str, int] = {}
         for q in cur[-1]["queries"]:
