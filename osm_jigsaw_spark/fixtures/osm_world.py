@@ -311,63 +311,6 @@ def _expected_from_ring(canon, osm_ids, ring):
 
 
 # --------------------------------------------------------------------------
-# Scaled world (bench): nested rectangle hierarchies + mega-area skew
-# --------------------------------------------------------------------------
-
-def build_scaled_world(n_areas: int = 20_000, seed: int = 42,
-                       depth: int = 6) -> World:
-    """Deterministic big world reproducing the reference's skew pathology
-    (a few mega areas containing nearly everything — root README.md:159-161).
-
-    All areas are named closed ways (4-corner rings): the stitching path is
-    covered by the fixed fixture; this world stresses decode + containment
-    join + reduction at volume.
-    """
-    rng = np.random.default_rng(seed)
-    w = World()
-    nid = _Ids(1_000_000)
-    rects: list[tuple[float, float, float, float]] = []
-
-    # mega areas: 3 giant overlapping rectangles (continent stand-ins)
-    rects.append((-85.0, -175.0, 80.0, 170.0))
-    rects.append((-80.0, -170.0, 85.0, 175.0))
-    rects.append((-60.0, -120.0, 60.0, 120.0))
-
-    # forest of nested hierarchies
-    n_roots = max(1, (n_areas - len(rects)) // max(1, (2 ** depth - 1)))
-    per_level = 2
-    while len(rects) < n_areas:
-        # root cell
-        clat = float(rng.uniform(-55, 55))
-        clon = float(rng.uniform(-115, 115))
-        h = float(rng.uniform(2.0, 6.0))
-        stack = [(clat - h, clon - h, clat + h, clon + h, 0)]
-        while stack and len(rects) < n_areas:
-            a, b, c, d, lvl = stack.pop()
-            rects.append((a, b, c, d))
-            if lvl < depth:
-                for _ in range(per_level):
-                    fy0, fy1 = sorted(rng.uniform(0.05, 0.95, 2))
-                    fx0, fx1 = sorted(rng.uniform(0.05, 0.95, 2))
-                    if (fy1 - fy0) < 0.15 or (fx1 - fx0) < 0.15:
-                        continue
-                    stack.append((a + (c - a) * fy0, b + (d - b) * fx0,
-                                  a + (c - a) * fy1, b + (d - b) * fx1,
-                                  lvl + 1))
-
-    for k, (a, b, c, d) in enumerate(rects[:n_areas]):
-        ids = []
-        for lat, lon in _rect_ring(round(a, 6), round(b, 6),
-                                   round(c, 6), round(d, 6)):
-            i = nid.next()
-            w.nodes.append(Node(i, lat, lon))
-            ids.append(i)
-        w.ways.append(Way(2_000_000 + k, ids + [ids[0]],
-                          [("name", f"Area {k}")]))
-    return w
-
-
-# --------------------------------------------------------------------------
 # Span encoding (FIXTURES.md §1) — rows + Spark DF + SQL literals
 # --------------------------------------------------------------------------
 

@@ -6,14 +6,16 @@ tiles/TileGenerator.scala:13-32) with a *columnar* lon/lat integer grid that
 is bit-aligned with geohash, so tile counts/ids match the reference
 (32 / 1,024 / 32,768 at res 1/2/3 — tiles/TileGeneratorSpec.scala:11-13).
 
-Everything the hot joins need (cell of a point, covering of a bbox, adaptive
-resolution) is pure `pyspark.sql.functions` arithmetic — whole-stage codegen,
-no Python in the path. Geohash *strings* exist only in the small tile
-dimension table, generated once in numpy.
+Everything the hot joins need (cell of a point, adaptive covering of a bbox,
+k-ring of a point) is pure `pyspark.sql.functions` arithmetic — whole-stage
+codegen, no Python in the path. Geohash *strings* exist only in the small
+tile dimension table, generated once in numpy.
 
 At resolution r (geohash-aligned): lon_bits = ceil(5r/2), lat_bits =
 floor(5r/2); a cell key packs (res, lon_idx, lat_idx) into one int64 so a
-single equi-join column carries multi-resolution candidates.
+single equi-join column carries multi-resolution candidates. `pack_cell` is
+the only place that layout is written; every key (points, coverings,
+k-rings, geohash tiles) is built through it.
 
 Scale design: a mega-polygon (continent) covered at its adaptive resolution
 explodes into at most MAX_COVER_CELLS rows — this replication IS the skew
@@ -74,57 +76,68 @@ def point_cells_all_res(lat: Column, lon: Column) -> Column:
     return F.array(*[cell_of_point(lat, lon, r) for r in RESOLUTIONS])
 
 
+def _bbox_index_rect(bbox: Column, res: int) -> tuple[Column, ...]:
+    """(lo_lon, hi_lon, lo_lat, hi_lat): the bbox's res-r index bounds."""
+    return (lon_idx(bbox["min_lon"], res), lon_idx(bbox["max_lon"], res),
+            lat_idx(bbox["min_lat"], res), lat_idx(bbox["max_lat"], res))
+
+
 def covering_count(bbox: Column, res: int) -> Column:
     """How many res-r cells the bbox spans — columnar, for adaptive choice."""
-    lo_lon = lon_idx(bbox["min_lon"], res)
-    hi_lon = lon_idx(bbox["max_lon"], res)
-    lo_lat = lat_idx(bbox["min_lat"], res)
-    hi_lat = lat_idx(bbox["max_lat"], res)
+    lo_lon, hi_lon, lo_lat, hi_lat = _bbox_index_rect(bbox, res)
     return (hi_lon - lo_lon + F.lit(1)) * (hi_lat - lo_lat + F.lit(1))
 
 
-def adaptive_res(bbox: Column, max_cells: int = MAX_COVER_CELLS) -> Column:
-    """Finest resolution whose covering stays within max_cells.
-
-    Chained `when` — evaluated entirely in codegen. Falls back to the
-    coarsest resolution (mega-areas: continents cover few coarse cells).
-    """
-    # Wrap coarse→fine: the outermost (last-wrapped, finest) feasible wins.
-    expr = F.lit(RESOLUTIONS[0])
-    for r in RESOLUTIONS[1:]:
-        expr = F.when(covering_count(bbox, r) <= max_cells, F.lit(r)).otherwise(expr)
-    return expr
-
-
-def covering_cells_at(bbox: Column, res: int) -> Column:
-    """array<long> of all res-r cells intersecting the bbox.
+def _cells_in_index_rect(res: int, lo_lon: Column, hi_lon: Column,
+                         lo_lat: Column, hi_lat: Column) -> Column:
+    """array<long> of the res-r cells whose indices lie in the inclusive
+    rectangle [lo_lon, hi_lon] × [lo_lat, hi_lat]; callers clamp the bounds.
 
     F.sequence × F.transform × F.flatten — generated JVM-side; the explode
     happens at the call site so Catalyst can pipeline it into the join.
     """
-    lo_lon = lon_idx(bbox["min_lon"], res)
-    hi_lon = lon_idx(bbox["max_lon"], res)
-    lo_lat = lat_idx(bbox["min_lat"], res)
-    hi_lat = lat_idx(bbox["max_lat"], res)
     return F.flatten(
         F.transform(
             F.sequence(lo_lon, hi_lon),
             lambda li: F.transform(
                 F.sequence(lo_lat, hi_lat),
-                lambda la: F.lit(res).cast("long") * F.lit(1 << 40) + li * F.lit(1 << 20) + la,
+                lambda la: pack_cell(res, li, la),
             ),
         )
     )
 
 
-def covering_cells_adaptive(bbox: Column, max_cells: int = MAX_COVER_CELLS) -> Column:
-    """array<long> covering at the adaptive resolution — one `when` chain."""
+def covering_cells_at(bbox: Column, res: int) -> Column:
+    """array<long> of all res-r cells intersecting the bbox."""
+    return _cells_in_index_rect(res, *_bbox_index_rect(bbox, res))
+
+
+def covering_cells_adaptive(bbox: Column) -> Column:
+    """array<long> covering at the finest resolution whose covering stays
+    within MAX_COVER_CELLS (coarsest as the fallback) — one `when` chain."""
     # Wrap coarse→fine: the outermost (last-wrapped, finest) feasible wins.
     out = covering_cells_at(bbox, RESOLUTIONS[0])
     for r in RESOLUTIONS[1:]:
-        out = F.when(covering_count(bbox, r) <= max_cells,
+        out = F.when(covering_count(bbox, r) <= MAX_COVER_CELLS,
                      covering_cells_at(bbox, r)).otherwise(out)
     return out
+
+
+def kring_cells(lat: Column, lon: Column, ring: int) -> Column:
+    """array<long> of the cells within `ring` grid steps of the point, at
+    every resolution. Clamped at grid borders (no wraparound — consistent
+    with the reference's acknowledged 180th-meridian blind spot)."""
+    def ring_at(r):
+        li, la = lon_idx(lon, r), lat_idx(lat, r)
+        return _cells_in_index_rect(
+            r,
+            F.greatest(F.lit(0), li - ring),
+            F.least(F.lit((1 << lon_bits(r)) - 1), li + ring),
+            F.greatest(F.lit(0), la - ring),
+            F.least(F.lit((1 << lat_bits(r)) - 1), la + ring),
+        )
+
+    return F.flatten(F.array(*[ring_at(r) for r in RESOLUTIONS]))
 
 
 # ---------------------------------------------------------------------------
@@ -180,9 +193,7 @@ def geohash_tiles(spark: SparkSession, res: int) -> DataFrame:
     pdf = _geohash_table_np(res)
     df = spark.createDataFrame(pdf)
     return df.withColumn(
-        "cell",
-        F.lit(res).cast("long") * F.lit(1 << 40)
-        + F.col("lon_idx") * F.lit(1 << 20) + F.col("lat_idx"),
+        "cell", pack_cell(res, F.col("lon_idx"), F.col("lat_idx")),
     ).withColumn(
         "bbox",
         F.struct(

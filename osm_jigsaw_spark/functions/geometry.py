@@ -39,6 +39,13 @@ def bbox_col(lats: Column, lons: Column) -> Column:
     )
 
 
+def _next_vertex(ring: Column) -> Column:
+    """The open ring rotated left by one: element i is vertex i+1 and the
+    last element is vertex 0, so zipping it with the ring yields every edge
+    including the implicit closing edge last->first."""
+    return F.concat(F.slice(ring, 2, 1_000_000_000), F.slice(ring, 1, 1))
+
+
 def shoelace_area_col(lats: Column, lons: Column) -> Column:
     """Planar |shoelace| area of an open ring, fully JVM-side.
 
@@ -48,11 +55,10 @@ def shoelace_area_col(lats: Column, lons: Column) -> Column:
     with the implicit closing edge handled by rotating the arrays.
     """
     # x_i*y_{i+1} - x_{i+1}*y_i summed over edges incl. last->first.
-    nxt_lats = F.concat(F.slice(lats, 2, 1_000_000_000), F.slice(lats, 1, 1))
-    nxt_lons = F.concat(F.slice(lons, 2, 1_000_000_000), F.slice(lons, 1, 1))
     cross = F.zip_with(
         F.arrays_zip(lats.alias("y"), lons.alias("x")),
-        F.arrays_zip(nxt_lats.alias("y"), nxt_lons.alias("x")),
+        F.arrays_zip(_next_vertex(lats).alias("y"),
+                     _next_vertex(lons).alias("x")),
         lambda a, b: a["x"] * b["y"] - b["x"] * a["y"],
     )
     return F.abs(
@@ -70,16 +76,6 @@ def bbox_contains_expr(a: str, b: str) -> Column:
     )
 
 
-def bbox_intersects_expr(a: str, b: str) -> Column:
-    """a.bbox intersects b.bbox (boundary-inclusive), columnar prefilter."""
-    return (
-        (F.col(f"{a}.min_lat") <= F.col(f"{b}.max_lat"))
-        & (F.col(f"{b}.min_lat") <= F.col(f"{a}.max_lat"))
-        & (F.col(f"{a}.min_lon") <= F.col(f"{b}.max_lon"))
-        & (F.col(f"{b}.min_lon") <= F.col(f"{a}.max_lon"))
-    )
-
-
 def pip_col(py: Column, px: Column, lats: Column, lons: Column,
             boundary: bool = True, eps: float = 1e-12) -> Column:
     """Boundary-inclusive point-in-polygon as a PURE COLUMN EXPRESSION.
@@ -88,12 +84,9 @@ def pip_col(py: Column, px: Column, lats: Column, lons: Column,
     whole-stage codegen, no Python). Same semantics as points_in_ring;
     used in the geocode hot path where per-row Arrow overhead dominates.
     """
-    big = 1_000_000_000
-    nxt_lats = F.concat(F.slice(lats, 2, big), F.slice(lats, 1, 1))
-    nxt_lons = F.concat(F.slice(lons, 2, big), F.slice(lons, 1, 1))
     edges = F.arrays_zip(
         lats.alias("y1"), lons.alias("x1"),
-        nxt_lats.alias("y2"), nxt_lons.alias("x2"),
+        _next_vertex(lats).alias("y2"), _next_vertex(lons).alias("x2"),
     )
 
     def crossing(acc, e):
@@ -121,13 +114,20 @@ def pip_col(py: Column, px: Column, lats: Column, lons: Column,
     return inside | F.exists(edges, on_edge)
 
 
-def is_axis_rect_col(lats: Column, lons: Column, bbox: Column) -> Column:
-    """True when the ring is exactly its bbox (4-vertex axis-aligned rect) —
-    lets containment skip the exact-geometry kernel (bbox test is exact)."""
+def rect_ring_col(lats: Column, lons: Column, bbox: Column,
+                  area: Column) -> Column:
+    """True when the ring is exactly its bbox: 4 vertices on 2 distinct lats
+    and 2 distinct lons whose shoelace `area` equals the bbox area (the area
+    guard rejects 2-lat/2-lon bowties). For such rings a bbox test IS the
+    exact geometry test, so the index (`is_rect`), containment and tiling
+    skip the polygon kernels for them."""
     return (
         (F.size(lats) == 4)
         & (F.size(F.array_distinct(lats)) == 2)
         & (F.size(F.array_distinct(lons)) == 2)
+        & (F.abs((bbox["max_lat"] - bbox["min_lat"])
+                 * (bbox["max_lon"] - bbox["min_lon"]) - area)
+           <= F.lit(1e-9) * F.greatest(area, F.lit(1.0)))
     )
 
 
@@ -175,6 +175,24 @@ def points_in_ring(py: np.ndarray, px: np.ndarray, ry: np.ndarray, rx: np.ndarra
     return on_boundary | (crossings % 2 == 1)
 
 
+def _straddles(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2):
+    """Segment orientation test, every a-segment (n,) against every
+    b-segment (m,). Returns two (n, m) arrays (d1*d2, d3*d4): d1, d2 are the
+    cross products of b's endpoints against a's direction, d3, d4 those of
+    a's endpoints against b's. A product below zero means the endpoints lie
+    on opposite sides; both below zero is a proper crossing.
+    """
+    ay1, ax1, ay2, ax2 = (v[:, None] for v in (ay1, ax1, ay2, ax2))
+    by1, bx1, by2, bx2 = (v[None, :] for v in (by1, bx1, by2, bx2))
+    adx, ady = ax2 - ax1, ay2 - ay1
+    bdx, bdy = bx2 - bx1, by2 - by1
+    d1 = adx * (by1 - ay1) - ady * (bx1 - ax1)
+    d2 = adx * (by2 - ay1) - ady * (bx2 - ax1)
+    d3 = bdx * (ay1 - by1) - bdy * (ax1 - bx1)
+    d4 = bdx * (ay2 - by1) - bdy * (ax2 - bx1)
+    return d1 * d2, d3 * d4
+
+
 def _proper_segment_crossings(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2) -> bool:
     """True if any segment of ring a properly crosses any segment of ring b.
 
@@ -182,13 +200,8 @@ def _proper_segment_crossings(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2) -> bool:
     Touching at endpoints or collinear overlap does NOT count (boundary
     contact is allowed by esri Contains).
     """
-    # Broadcast a-segments (n,1) against b-segments (1,m).
-    d1 = (ax2 - ax1)[:, None] * (by1[None, :] - ay1[:, None]) - (ay2 - ay1)[:, None] * (bx1[None, :] - ax1[:, None])
-    d2 = (ax2 - ax1)[:, None] * (by2[None, :] - ay1[:, None]) - (ay2 - ay1)[:, None] * (bx2[None, :] - ax1[:, None])
-    d3 = (bx2 - bx1)[None, :] * (ay1[:, None] - by1[None, :]) - (by2 - by1)[None, :] * (ax1[:, None] - bx1[None, :])
-    d4 = (bx2 - bx1)[None, :] * (ay2[:, None] - by1[None, :]) - (by2 - by1)[None, :] * (ax2[:, None] - bx1[None, :])
-    strict = ((d1 * d2) < -_EPS) & ((d3 * d4) < -_EPS)
-    return bool(strict.any())
+    s_ab, s_ba = _straddles(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2)
+    return bool(((s_ab < -_EPS) & (s_ba < -_EPS)).any())
 
 
 def ring_contains_ring(ay: np.ndarray, ax: np.ndarray, by: np.ndarray, bx: np.ndarray) -> bool:
@@ -231,11 +244,8 @@ def ring_intersects_rect(ry: np.ndarray, rx: np.ndarray,
 
 def _segments_touch(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2) -> bool:
     """Any intersection at all (incl. endpoint touch / collinear overlap)."""
-    d1 = (ax2 - ax1)[:, None] * (by1[None, :] - ay1[:, None]) - (ay2 - ay1)[:, None] * (bx1[None, :] - ax1[:, None])
-    d2 = (ax2 - ax1)[:, None] * (by2[None, :] - ay1[:, None]) - (ay2 - ay1)[:, None] * (bx2[None, :] - ax1[:, None])
-    d3 = (bx2 - bx1)[None, :] * (ay1[:, None] - by1[None, :]) - (by2 - by1)[None, :] * (ax1[:, None] - bx1[None, :])
-    d4 = (bx2 - bx1)[None, :] * (ay2[:, None] - by1[None, :]) - (by2 - by1)[None, :] * (ax2[:, None] - bx1[None, :])
-    general = ((d1 * d2) <= _EPS) & ((d3 * d4) <= _EPS)
+    s_ab, s_ba = _straddles(ay1, ax1, ay2, ax2, by1, bx1, by2, bx2)
+    general = (s_ab <= _EPS) & (s_ba <= _EPS)
     if not general.any():
         return False
     # The <= test admits collinear-but-disjoint pairs; verify those with
@@ -305,19 +315,14 @@ def ring_contains_rings_batch(ay: np.ndarray, ax: np.ndarray,
     bx2 = np.concatenate([np.roll(a, -1) for a in co])
     coffs = np.concatenate(([0], np.cumsum(lens[cand])))
     ay2, ax2 = np.roll(ay, -1), np.roll(ax, -1)
-    adx, ady = (ax2 - ax)[:, None], (ay2 - ay)[:, None]
     S = by1.shape[0]
     col_cross = np.empty(S, dtype=bool)
     step = _chunk_rows(ay.shape[0])
     for s in range(0, S, step):
         sl = slice(s, min(s + step, S))
-        b1y, b1x = by1[sl][None, :], bx1[sl][None, :]
-        b2y, b2x = by2[sl][None, :], bx2[sl][None, :]
-        d1 = adx * (b1y - ay[:, None]) - ady * (b1x - ax[:, None])
-        d2 = adx * (b2y - ay[:, None]) - ady * (b2x - ax[:, None])
-        d3 = (b2x - b1x) * (ay[:, None] - b1y) - (b2y - b1y) * (ax[:, None] - b1x)
-        d4 = (b2x - b1x) * (ay2[:, None] - b1y) - (b2y - b1y) * (ax2[:, None] - b1x)
-        col_cross[sl] = (((d1 * d2) < -_EPS) & ((d3 * d4) < -_EPS)).any(axis=0)
+        s_ab, s_ba = _straddles(ay, ax, ay2, ax2,
+                                by1[sl], bx1[sl], by2[sl], bx2[sl])
+        col_cross[sl] = ((s_ab < -_EPS) & (s_ba < -_EPS)).any(axis=0)
     crossed = np.logical_or.reduceat(col_cross, coffs[:-1])
     out[cand] = ~crossed
     return out
@@ -360,7 +365,6 @@ def ring_intersects_rects_batch(ry: np.ndarray, rx: np.ndarray,
         r2x = np.stack([mxlo[rem], mxlo[rem], mnlo[rem], mnlo[rem]], 1).reshape(-1)
         ay1, ax1 = ry, rx
         ay2, ax2 = np.roll(ry, -1), np.roll(rx, -1)
-        adx, ady = (ax2 - ax1)[:, None], (ay2 - ay1)[:, None]
         a_xmin = np.minimum(ax1, ax2)[:, None]
         a_xmax = np.maximum(ax1, ax2)[:, None]
         a_ymin = np.minimum(ay1, ay2)[:, None]
@@ -370,13 +374,11 @@ def ring_intersects_rects_batch(ry: np.ndarray, rx: np.ndarray,
         step = _chunk_rows(ry.shape[0])
         for s in range(0, S, step):
             sl = slice(s, min(s + step, S))
+            s_ab, s_ba = _straddles(ay1, ax1, ay2, ax2,
+                                    r1y[sl], r1x[sl], r2y[sl], r2x[sl])
             b1y, b1x = r1y[sl][None, :], r1x[sl][None, :]
             b2y, b2x = r2y[sl][None, :], r2x[sl][None, :]
-            d1 = adx * (b1y - ay1[:, None]) - ady * (b1x - ax1[:, None])
-            d2 = adx * (b2y - ay1[:, None]) - ady * (b2x - ax1[:, None])
-            d3 = (b2x - b1x) * (ay1[:, None] - b1y) - (b2y - b1y) * (ax1[:, None] - b1x)
-            d4 = (b2x - b1x) * (ay2[:, None] - b1y) - (b2y - b1y) * (ax2[:, None] - b1x)
-            general = ((d1 * d2) <= _EPS) & ((d3 * d4) <= _EPS)
+            general = (s_ab <= _EPS) & (s_ba <= _EPS)
             bbox_ok = (
                 (np.maximum(a_xmin, np.minimum(b1x, b2x))
                  <= np.minimum(a_xmax, np.maximum(b1x, b2x)) + _EPS)

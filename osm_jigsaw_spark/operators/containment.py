@@ -42,37 +42,30 @@ from pyspark.sql import types as T
 from ..functions import cells as C
 from ..functions.geometry import (
     bbox_contains_expr,
-    is_axis_rect_col,
+    rect_ring_col,
     ring_contains_rings_batch,
 )
 
 ROOT_ID = "-1"  # synthetic root osm_id (reference uses area id -1)
 
 
-def area_cell_index(areas: DataFrame,
-                    max_cells: int = C.MAX_COVER_CELLS) -> DataFrame:
+def area_cell_index(areas: DataFrame) -> DataFrame:
     """Exploded covering index: (cell, area_key + geometry payload).
 
     The single spatial index shared by containment, geocode, kNN and tiling
     joins — replacing the reference's per-polygon esri acceleration
     (GraphBuilder.scala:120) and geohash segment files (steps/Tiling.scala).
 
-    `is_rect` marks rings that are exactly their bbox (4-corner axis
-    rect whose shoelace area equals the bbox area — the area guard
-    rejects 2-lat/2-lon bowties): for those the bbox test IS the exact
-    geometry test and consumers skip the polygon kernel entirely.
+    `is_rect` (geometry.rect_ring_col) marks rings that are exactly their
+    bbox: for those the bbox test IS the exact geometry test and consumers
+    skip the polygon kernel entirely.
     """
-    bbox_area = F.abs(
-        (F.col("bbox.max_lat") - F.col("bbox.min_lat"))
-        * (F.col("bbox.max_lon") - F.col("bbox.min_lon"))
-        - F.col("area")
-    ) <= F.lit(1e-9) * F.greatest(F.col("area"), F.lit(1.0))
     return areas.select(
         F.col("ring_hash").alias("area_key"),
         "canonical_osm_id", "area", "bbox", "lats", "lons",
-        (is_axis_rect_col(F.col("lats"), F.col("lons"), F.col("bbox"))
-         & bbox_area).alias("is_rect"),
-        F.explode(C.covering_cells_adaptive(F.col("bbox"), max_cells)).alias("cell"),
+        rect_ring_col(F.col("lats"), F.col("lons"), F.col("bbox"),
+                      F.col("area")).alias("is_rect"),
+        F.explode(C.covering_cells_adaptive(F.col("bbox"))).alias("cell"),
     )
 
 
@@ -118,6 +111,7 @@ def contains_pairs(areas: DataFrame,
         F.col("bbox").alias("parent_bbox"),
         F.col("lats").alias("parent_lats"),
         F.col("lons").alias("parent_lons"),
+        F.col("is_rect").alias("parent_is_rect"),
     )
     children = areas.select(
         F.col("ring_hash").alias("child_key"),
@@ -144,18 +138,14 @@ def contains_pairs(areas: DataFrame,
     )
     # Fast path: axis-aligned-rect pairs are decided by the bbox filter
     # alone (exact), entirely in codegen — the Arrow kernel only sees pairs
-    # with at least one non-rectangular ring.
-    bbox_area = lambda b, a: (  # noqa: E731
-        F.abs((F.col(f"{b}.max_lat") - F.col(f"{b}.min_lat"))
-              * (F.col(f"{b}.max_lon") - F.col(f"{b}.min_lon"))
-              - F.col(a)) <= F.lit(1e-9) * F.greatest(F.col(a), F.lit(1.0)))
-    p_rect = (is_axis_rect_col(F.col("parent_lats"), F.col("parent_lons"),
-                               F.col("parent_bbox"))
-              & bbox_area("parent_bbox", "parent_area"))
-    c_rect = (is_axis_rect_col(F.col("child_lats"), F.col("child_lons"),
-                               F.col("child_bbox"))
-              & bbox_area("child_bbox", "child_area"))
-    cand = cand.withColumn("both_rect", p_rect & c_rect)
+    # with at least one non-rectangular ring. The parent's flag comes from
+    # the index; the child's is computed only for surviving candidates.
+    cand = cand.withColumn(
+        "both_rect",
+        F.col("parent_is_rect")
+        & rect_ring_col(F.col("child_lats"), F.col("child_lons"),
+                        F.col("child_bbox"), F.col("child_area")),
+    )
     rect_pairs = cand.filter("both_rect")
     poly_pairs = (
         cand.filter(~F.col("both_rect"))

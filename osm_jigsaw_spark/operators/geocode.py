@@ -107,31 +107,29 @@ def _enumerate_point(point_id, parents, childs, osms, out):
             stack.append((c, path + [osm], keys + [c]))
 
 
-def _enumerate_batches(batches):
-    """mapInPandas worker: rows arrive sorted by point_id within the
-    partition; a point's rows may straddle Arrow batch boundaries, so the
-    trailing group is buffered and prepended to the next batch."""
+def _whole_points(batches):
+    """Re-chunk Arrow batches sorted by point_id so no point's rows straddle
+    two chunks: each batch's trailing point is held back and prepended to
+    the next batch, and the last held-back point follows the final batch."""
     carry = None
     for pdf in batches:
         if carry is not None:
             pdf = pd.concat([carry, pdf], ignore_index=True)
-            carry = None
         if len(pdf) == 0:
             continue
-        last_pid = pdf["point_id"].iloc[-1]
-        mask = pdf["point_id"] == last_pid
-        carry = pdf[mask]
-        pdf = pdf[~mask]
+        last = pdf["point_id"] == pdf["point_id"].iloc[-1]
+        carry = pdf[last]
+        yield pdf[~last]
+    if carry is not None:
+        yield carry
+
+
+def _enumerate_batches(batches):
+    """mapInPandas worker: rows arrive sorted by point_id within the
+    partition; enumerates each point's paths once all its rows are in."""
+    for pdf in _whole_points(batches):
         out: list = []
         for pid, grp in pdf.groupby("point_id", sort=False):
-            _enumerate_point(pid, grp["parent_key"].to_numpy(),
-                             grp["child_key"].to_numpy(),
-                             grp["child_osm_id"].to_numpy(), out)
-        if out:
-            yield pd.DataFrame(out, columns=["point_id", "path", "path_keys"])
-    if carry is not None and len(carry):
-        out = []
-        for pid, grp in carry.groupby("point_id", sort=False):
             _enumerate_point(pid, grp["parent_key"].to_numpy(),
                              grp["child_key"].to_numpy(),
                              grp["child_osm_id"].to_numpy(), out)

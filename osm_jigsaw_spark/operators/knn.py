@@ -5,9 +5,8 @@ thing is the geohash-cell segment lookup, osm-jigsaw-api
 app/graph/GraphService.scala:31-32). Documented as such in SURVEY.md §2.5.
 
 Approach: candidate areas come from the shared covering index joined against
-the query point's cell *neighborhood* (k-ring of radius `ring` at each
-resolution — pure columnar sequence×sequence explode, same trick as bbox
-coverings). Exact point→polygon distance (0 when inside) is an Arrow
+the query point's cell *neighborhood* (functions/cells.kring_cells: k-ring
+of radius `ring` at each resolution, enumerated like a bbox covering). Exact point→polygon distance (0 when inside) is an Arrow
 kernel; per-point top-k is a window row_number. Points whose k-ring finds
 fewer than k candidates report what was found — widen `ring` to trade
 shuffle volume for recall (at planet density res-3 cells hold hundreds of
@@ -22,43 +21,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions import cells as C
+from ..functions.cells import kring_cells
 from ..functions.geometry import points_ring_distance_batch
 from .containment import area_cell_index
-
-
-def _kring_cells(lat, lon, ring: int):
-    """array<long> of packed cells within `ring` grid steps of the point, at
-    every resolution. Clamped at grid borders (no wraparound — consistent
-    with the reference's acknowledged 180th-meridian blind spot)."""
-    def ring_at(r):
-        li, la = C.lon_idx(lon, r), C.lat_idx(lat, r)
-        max_lon_i = (1 << C.lon_bits(r)) - 1
-        max_lat_i = (1 << C.lat_bits(r)) - 1
-
-        def over_lat(i):
-            def cell(j):
-                return (F.lit(r).cast("long") * F.lit(1 << 40)
-                        + i * F.lit(1 << 20) + j)
-            return F.transform(
-                F.sequence(
-                    F.greatest(F.lit(0), la - ring),
-                    F.least(F.lit(max_lat_i), la + ring),
-                ),
-                cell,
-            )
-
-        return F.flatten(
-            F.transform(
-                F.sequence(
-                    F.greatest(F.lit(0), li - ring),
-                    F.least(F.lit(max_lon_i), li + ring),
-                ),
-                over_lat,
-            )
-        )
-
-    return F.flatten(F.array(*[ring_at(r) for r in C.RESOLUTIONS]))
 
 
 @F.pandas_udf(T.DoubleType())
@@ -89,7 +54,7 @@ def knn_areas(areas: DataFrame, points: DataFrame, k: int = 5,
         idx = area_cell_index(areas)
     pts = points.select(
         "point_id", "lat", "lon",
-        F.explode(_kring_cells(F.col("lat"), F.col("lon"), ring)).alias("cell"),
+        F.explode(kring_cells(F.col("lat"), F.col("lon"), ring)).alias("cell"),
     )
     cand = (
         pts.join(idx, "cell")

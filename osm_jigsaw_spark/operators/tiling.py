@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
-from ..functions.geometry import is_axis_rect_col, ring_intersects_rects_batch
+from ..functions.geometry import rect_ring_col, ring_intersects_rects_batch
 from .containment import ROOT_ID
 
 
@@ -60,19 +60,11 @@ def tile_assignments(spark: SparkSession, areas: DataFrame,
         F.col("min_lat").alias("t_min_lat"), F.col("min_lon").alias("t_min_lon"),
         F.col("max_lat").alias("t_max_lat"), F.col("max_lon").alias("t_max_lon"),
     )
-    # same is_rect definition as containment.area_cell_index: ring == its
-    # bbox (4-corner axis rect, shoelace area == bbox area) ⇒ the bbox
-    # rect-overlap test IS the exact geometry test
-    bbox_area_eq = F.abs(
-        (F.col("bbox.max_lat") - F.col("bbox.min_lat"))
-        * (F.col("bbox.max_lon") - F.col("bbox.min_lon"))
-        - F.col("area")
-    ) <= F.lit(1e-9) * F.greatest(F.col("area"), F.lit(1.0))
     covered = areas.select(
         F.col("ring_hash").alias("area_key"), "canonical_osm_id",
         "lats", "lons", "bbox",
-        (is_axis_rect_col(F.col("lats"), F.col("lons"), F.col("bbox"))
-         & bbox_area_eq).alias("is_rect"),
+        rect_ring_col(F.col("lats"), F.col("lons"), F.col("bbox"),
+                      F.col("area")).alias("is_rect"),
         F.explode(C.covering_cells_at(F.col("bbox"), res)).alias("cell"),
     )
     # tiles is tiny (≤32k rows) — broadcast; covering join prunes to

@@ -16,11 +16,12 @@ per-partition lineage and metrics"): every stage writes
 
 `run_stage` skips recomputation when a _SUCCESS.json with a matching
 fingerprint exists (resume), else computes, writes, and records metrics.
-Fingerprints chain: a stage's fingerprint hashes its name, the declared
-code version, a hash of the package source, and its inputs' fingerprints
-— editing an upstream stage invalidates everything downstream, and editing
-any operator invalidates every stage, so a resume never reuses output
-computed by older code.
+Fingerprints chain: a stage's fingerprint hashes its name, a hash of the
+package source, and its inputs' fingerprints; the input documents'
+fingerprint hashes their content. Changing the documents or an upstream
+stage invalidates everything downstream, and editing any operator
+invalidates every stage, so a resume never reuses output computed from
+other input or by older code.
 """
 
 from __future__ import annotations
@@ -66,12 +67,11 @@ class StageResult:
 class CheckpointedPipeline:
     spark: SparkSession
     root: str
-    version: str = "1"
     stages: dict[str, StageResult] = field(default_factory=dict)
 
     def _fingerprint(self, name: str, inputs: list[str]) -> str:
         h = hashlib.md5()
-        h.update(f"{name}:{self.version}:{source_hash()}".encode())
+        h.update(f"{name}:{source_hash()}".encode())
         for i in inputs:
             h.update(self.stages[i].fingerprint.encode())
         return h.hexdigest()
@@ -117,28 +117,38 @@ class CheckpointedPipeline:
         wall = time.time() - t0
         with open(success, "w") as f:
             json.dump({"fingerprint": fp, "wall_sec": round(wall, 3),
-                       "inputs": inputs, "version": self.version}, f)
+                       "inputs": inputs}, f)
         res = StageResult(name, out, fp, False, wall, metrics_dir)
         self.stages[name] = res
         return res
 
 
+def content_hash(df: DataFrame) -> str:
+    """md5 of the row count and the order-independent sum of per-row
+    xxhash64 values (summed as a decimal, so no overflow)."""
+    n, total = df.select(
+        F.count("*"),
+        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")),
+    ).first()
+    return hashlib.md5(f"{n}:{total}".encode()).hexdigest()
+
+
 def run_checkpointed(spark: SparkSession, documents: DataFrame,
-                     root: str, version: str = "1") -> CheckpointedPipeline:
+                     root: str) -> CheckpointedPipeline:
     """The full documents→graph pipeline with per-stage resume points
     (the reference's boundaries→extract→areaways→areas→graph chain)."""
     from ..operators import areas as A
     from ..operators import containment as G
     from ..sources import documents as D
 
-    cp = CheckpointedPipeline(spark, root, version)
+    cp = CheckpointedPipeline(spark, root)
     os.makedirs(root, exist_ok=True)
 
     docs_dir = os.path.join(root, "_input")
     documents.write.mode("overwrite").parquet(docs_dir)
+    docs = spark.read.parquet(docs_dir)
     cp.stages["documents"] = StageResult(
-        "documents", spark.read.parquet(docs_dir),
-        hashlib.md5(docs_dir.encode()).hexdigest(), False, 0.0)
+        "documents", docs, content_hash(docs), False, 0.0)
 
     cp.run_stage("nodes", lambda d: D.decode_nodes(d["documents"]),
                  ["documents"], key_cols=["node_id"])

@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..operators import areas as A
 from ..operators import containment as G
@@ -48,7 +47,3 @@ def run_pipeline(documents: DataFrame, cache: bool = True,
     edges = G.graph_edges(areas)
     atags = A.area_tags(tags, areas)
     return PipelineResult(nodes, ways, relations, tags, areas, edges, atags)
-
-
-def load_documents(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

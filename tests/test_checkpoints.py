@@ -44,12 +44,20 @@ def test_metrics_sidecar_covers_all_rows_with_lineage(spark, docs, cp_root):
     assert lin["nodes"] == cp.stages["nodes"].fingerprint
 
 
-def test_version_bump_invalidates_downstream(spark, docs, cp_root):
-    cp = run_checkpointed(spark, docs, cp_root, version="2")
+def test_changed_documents_at_same_root_recompute_every_stage(spark, docs,
+                                                             cp_root):
+    """Stage fingerprints follow the documents' content, not the root path:
+    new documents at the same root never resume stages built from the old."""
+    run_checkpointed(spark, docs, cp_root)  # stages current for `docs`
+    last = docs.agg(F.max("doc_id")).first()[0]
+    changed = docs.filter(F.col("doc_id") != last)
+    cp = run_checkpointed(spark, changed, cp_root)
     assert all(not cp.stages[s].resumed for s in STAGES)
-    # and the new fingerprints were persisted: a re-run at v2 resumes
-    cp2 = run_checkpointed(spark, docs, cp_root, version="2")
+    cp2 = run_checkpointed(spark, changed, cp_root)
     assert all(cp2.stages[s].resumed for s in STAGES)
+    # and back to the original documents: recomputed again
+    cp3 = run_checkpointed(spark, docs, cp_root)
+    assert all(not cp3.stages[s].resumed for s in STAGES)
 
 
 def test_source_edit_invalidates_every_stage(spark, docs, cp_root,

@@ -160,3 +160,50 @@ def test_geocode_matches_brute_force(spark, pipeline, qpoints):
         pipeline.areas, pipeline.graph_edges, pts_df).collect()]
     assert {pid[0] for pid, _p, _k in expected} >= {"g", "a"}
     assert sorted(got) == sorted(expected)
+
+
+def test_geocode_carries_points_across_arrow_batches(spark, pipeline, qpoints):
+    """Two rows per Arrow batch splits most points' edge rows across
+    batches: the path enumerator must carry each split point into the next
+    batch and flush the last one, giving the same rows as the default batch
+    size and as enumerating every point's collected edges in the driver."""
+    from osm_jigsaw_spark.operators.geocode import (
+        _enumerate_point,
+        areas_containing_points,
+        point_edges,
+    )
+
+    rng = np.random.default_rng(11)
+    points = [(r.point_id, r.lat, r.lon) for r in qpoints.collect()] + [
+        (f"a{i}_{j}", float(rng.uniform(b.min_lat, b.max_lat)),
+         float(rng.uniform(b.min_lon, b.max_lon)))
+        for i, (b,) in enumerate(pipeline.areas.select("bbox").collect())
+        for j in range(8)]
+    pts = spark.createDataFrame(points, "point_id string, lat double, lon double")
+
+    def run():
+        return sorted(
+            (r.point_id, tuple(r.path), tuple(r.path_keys)) for r in geocode(
+                pipeline.areas, pipeline.graph_edges, pts).collect())
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    default = run()
+    try:
+        spark.conf.set(key, "2")
+        small = run()
+    finally:
+        spark.conf.set(key, before)
+
+    by_point = {}
+    for r in point_edges(pipeline.graph_edges, areas_containing_points(
+            pipeline.areas, pts)).collect():
+        by_point.setdefault(r.point_id, []).append(r)
+    out = []
+    for pid, rows in by_point.items():
+        _enumerate_point(pid, [r.parent_key for r in rows],
+                         [r.child_key for r in rows],
+                         [r.child_osm_id for r in rows], out)
+    expected = sorted((p, tuple(path), tuple(keys)) for p, path, keys in out)
+    assert len(by_point) > 50
+    assert small == default == expected

@@ -1,12 +1,17 @@
 """Geometry kernels: shoelace, PIP, contains, intersects, normalization."""
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from osm_jigsaw_spark.functions.geometry import (
+    bbox_col,
     normalize_ring,
     points_in_ring,
+    rect_ring_col,
     ring_contains_ring,
     ring_intersects_rect,
+    shoelace_area_col,
     shoelace_area_np,
 )
 
@@ -77,3 +82,21 @@ def test_normalize_ring_rotation_direction():
     for other in (rot, rev):
         ny, nx = normalize_ring(*other)
         assert np.array_equal(base[0], ny) and np.array_equal(base[1], nx)
+
+
+@pytest.mark.parametrize("pts,expected", [
+    ([(0, 0), (0, 2), (1, 2), (1, 0)], True),    # axis rect, clockwise
+    ([(0, 0), (1, 0), (1, 2), (0, 2)], True),    # axis rect, counter-clockwise
+    ([(0, 0), (1, 1), (0, 1), (1, 0)], False),   # bowtie: 2 lats, 2 lons
+    ([(0, 0), (0, 4), (2, 3), (2, 1)], False),   # trapezoid
+    ([(0, 0), (0, 1), (0, 2), (1, 2), (1, 0)], False),  # collinear vertex
+])
+def test_rect_ring_col(spark, pts, expected):
+    df = spark.createDataFrame(
+        [([float(p[0]) for p in pts], [float(p[1]) for p in pts])],
+        "lats array<double>, lons array<double>")
+    lats, lons = F.col("lats"), F.col("lons")
+    got = df.select(rect_ring_col(
+        lats, lons, bbox_col(lats, lons), shoelace_area_col(lats, lons))
+    ).first()[0]
+    assert got is expected

@@ -43,7 +43,6 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="checkpoint root")
     ap.add_argument("--geocode-points", type=int, default=0,
                     help="also geocode N deterministic points")
-    ap.add_argument("--version", default="1")
     args = ap.parse_args()
 
     # Import AFTER spark-submit has put --py-files on sys.path.
@@ -64,7 +63,7 @@ def main() -> None:
             raise SystemExit("one of --docs / --synthetic is required")
         docs = spark.read.parquet(args.docs)
 
-    cp = run_checkpointed(spark, docs, args.out, version=args.version)
+    cp = run_checkpointed(spark, docs, args.out)
     facts = {
         "stages": {
             name: {"resumed": st.resumed, "wall_sec": round(st.wall_sec, 3),
