@@ -434,7 +434,9 @@ def normalize_ring(ry: np.ndarray, rx: np.ndarray) -> tuple[np.ndarray, np.ndarr
     O(n·w) equal-area + mutual-containment scan
     (steps/RenderAndDeduplicateAreas.scala:72-120): two rings with the same
     vertex cycle (either direction, any starting point) normalize bytewise
-    identically.
+    identically. The form is the least of the rotations that start at the
+    minimum vertex, read either way; a ring that visits its minimum vertex
+    more than once (a pinch) has one candidate start per visit.
     """
     pts = list(zip(ry.tolist(), rx.tolist()))
     # Drop explicit closing vertex if present.
@@ -443,10 +445,12 @@ def normalize_ring(ry: np.ndarray, rx: np.ndarray) -> tuple[np.ndarray, np.ndarr
     n = len(pts)
     if n == 0:
         return np.array([]), np.array([])
-    start = min(range(n), key=lambda i: pts[i])
-    fwd = [pts[(start + i) % n] for i in range(n)]
-    rev = [pts[(start - i) % n] for i in range(n)]
-    best = min(fwd, rev)
+    lo = min(pts)
+    best = min(
+        min([pts[(s + i) % n] for i in range(n)],
+            [pts[(s - i) % n] for i in range(n)])
+        for s in range(n) if pts[s] == lo
+    )
     ys = np.array([p[0] for p in best])
     xs = np.array([p[1] for p in best])
     return ys, xs

@@ -13,7 +13,9 @@ Re-expresses the reference stages `areaways` + `areas`
   (replacing MapDB lookups, resolving/NodeResolver.scala:18-50);
 - ring cleanup: drop consecutive duplicate joints + the closing vertex
   (open-ring convention; the reference keeps duplicates, which are
-  area/PIP-neutral — we normalize for exact hashing);
+  area/PIP-neutral — we normalize for exact hashing), linear in the ring
+  size: each vertex is compared with a one-shifted copy of the ring, and
+  the cleanup runs once per ring, inside the assembling aggregate;
 - dedup: canonical-ring hash groupBy replaces the reference's O(n·w)
   equal-area + mutual-containment linear scan
   (RenderAndDeduplicateAreas.scala:82-101) — merged areas union their osm_ids.
@@ -71,19 +73,54 @@ def relation_outlines(relations: DataFrame, ways: DataFrame) -> DataFrame:
         "osm_id", "ring_index", "node_ids")
 
 
-def _clean_ring_pts(pts):
-    """Open-ring cleanup on an array<struct(lat,lon)> column: drop
-    consecutive duplicate joints, then the explicit closing vertex."""
-    # consecutive-duplicate removal (1-based element_at(pts, i) = predecessor)
-    deduped = F.filter(
-        pts, lambda x, i: (i == F.lit(0)) | (x != F.element_at(pts, i))
+def _let(value, body):
+    """body(value) with `value` evaluated once: bound as the lambda variable
+    of a one-element transform (README "Scale design", let-binding rule)."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _clean_ring(lats, lons):
+    """Open-ring cleanup in one linear pass: drop consecutive duplicate
+    vertices, then the explicit closing vertex. Vertices compare as
+    struct(lat, lon). Returns struct(lats, lons); each input array and each
+    intermediate is evaluated once (README "Scale design", let-binding
+    rule)."""
+    def drop_repeats(pts):
+        # prev[i] = pts[i - 1]; prev[0] is padding, skipped by position
+        prev = F.slice(F.concat(F.slice(pts, 1, 1), pts), 1, F.size(pts))
+        pairs = F.zip_with(
+            pts, prev, lambda p, q: F.struct(p.alias("pt"), q.alias("prev")))
+        return F.transform(
+            F.filter(pairs, lambda z, i: (i == 0) | (z["pt"] != z["prev"])),
+            lambda z: z["pt"])
+
+    def drop_closing(pts):
+        n = F.size(pts)
+        closed = (n > 1) & (F.element_at(pts, 1) == F.element_at(pts, -1))
+        m = F.when(closed, n - 1).otherwise(n)
+        return F.struct(
+            F.slice(F.transform(pts, lambda p: p["lat"]), 1, m).alias("lats"),
+            F.slice(F.transform(pts, lambda p: p["lon"]), 1, m).alias("lons"))
+
+    pts = F.zip_with(
+        lats, lons, lambda la, lo: F.struct(la.alias("lat"), lo.alias("lon")))
+    return _let(_let(pts, drop_repeats), drop_closing)
+
+
+def _assemble_rings(joined: DataFrame, item, lats_of, lons_of) -> DataFrame:
+    """Group `joined` per (osm_id, ring_index), sort the collected `item`
+    structs by their first field and clean the ring lats_of(items),
+    lons_of(items): (osm_id, ring_index, lats, lons, n_points).
+
+    The cleanup is an aggregate output: a later filter on n_points cannot
+    be pushed below the aggregate, so it reads the cleaned ring instead of
+    re-running the cleanup."""
+    ring = _let(F.array_sort(F.collect_list(item)),
+                lambda items: _clean_ring(lats_of(items), lons_of(items)))
+    return joined.groupBy("osm_id", "ring_index").agg(ring.alias("ring")).select(
+        "osm_id", "ring_index", "ring.lats", "ring.lons",
+        F.size("ring.lats").alias("n_points"),
     )
-    # drop closing vertex if ring is explicitly closed
-    return F.when(
-        (F.size(deduped) > 1)
-        & (F.element_at(deduped, 1) == F.element_at(deduped, -1)),
-        F.slice(deduped, 1, F.size(deduped) - 1),
-    ).otherwise(deduped)
 
 
 def resolve_outline_points(outlines: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -96,21 +133,11 @@ def resolve_outline_points(outlines: DataFrame, nodes: DataFrame) -> DataFrame:
         "osm_id", "ring_index", F.posexplode("node_ids").alias("seq", "node_id")
     )
     joined = exploded.join(nodes.select("node_id", "lat", "lon"), "node_id")
-    assembled = joined.groupBy("osm_id", "ring_index").agg(
-        F.array_sort(
-            F.collect_list(F.struct("seq", "lat", "lon"))
-        ).alias("pts_raw")
+    return _assemble_rings(
+        joined, F.struct("seq", "lat", "lon"),
+        lambda pts: F.transform(pts, lambda s: s["lat"]),
+        lambda pts: F.transform(pts, lambda s: s["lon"]),
     )
-    pts = F.transform(
-        F.col("pts_raw"), lambda s: F.struct(s["lat"].alias("lat"), s["lon"].alias("lon"))
-    )
-    opened = _clean_ring_pts(pts)
-    return assembled.select(
-        "osm_id",
-        "ring_index",
-        F.transform(opened, lambda s: s["lat"]).alias("lats"),
-        F.transform(opened, lambda s: s["lon"]).alias("lons"),
-    ).withColumn("n_points", F.size("lats"))
 
 
 def outline_way_refs(ways: DataFrame, relations: DataFrame) -> DataFrame:
@@ -178,23 +205,11 @@ def reassemble_outline_points(outline_refs: DataFrame,
         F.when(F.col("signed") < 0, F.reverse("lons"))
         .otherwise(F.col("lons")).alias("seg_lons"),
     )
-    assembled = j.groupBy("osm_id", "ring_index").agg(
-        F.array_sort(
-            F.collect_list(F.struct("pos", "seg_lats", "seg_lons"))
-        ).alias("segs")
+    return _assemble_rings(
+        j, F.struct("pos", "seg_lats", "seg_lons"),
+        lambda segs: F.flatten(F.transform(segs, lambda s: s["seg_lats"])),
+        lambda segs: F.flatten(F.transform(segs, lambda s: s["seg_lons"])),
     )
-    lats = F.flatten(F.transform("segs", lambda s: s["seg_lats"]))
-    lons = F.flatten(F.transform("segs", lambda s: s["seg_lons"]))
-    pts = F.zip_with(
-        lats, lons,
-        lambda la, lo: F.struct(la.alias("lat"), lo.alias("lon")))
-    opened = _clean_ring_pts(pts)
-    return assembled.select(
-        "osm_id",
-        "ring_index",
-        F.transform(opened, lambda s: s["lat"]).alias("lats"),
-        F.transform(opened, lambda s: s["lon"]).alias("lons"),
-    ).withColumn("n_points", F.size("lats"))
 
 
 def area_tags(tags: DataFrame, areas: DataFrame) -> DataFrame:

@@ -63,15 +63,10 @@ def shingle_arrays(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, shingles array<string>) — per-doc DISTINCT k-word shingles.
 
     Two scale-critical choices:
-    - the word array is LET-BOUND as the element of a one-element array
-      consumed by a transform lambda: every reference to the words inside
-      the shingling expression is the lambda variable, which Catalyst
-      cannot inline. A mere separate projection is NOT enough —
-      CollapseProject merges it into the consumer and re-evaluates the
-      full regex split at every reference, including once per shingle
-      position inside the per-position lambda: O(words²) per doc
-      (measured this round: 4 `split(` nodes in the collapsed physical
-      plan and a 2.5× end-to-end slowdown at 600k docs);
+    - the word array is let-bound (README "Scale design", let-binding
+      rule), so the regex split runs once per doc, not once per shingle
+      position (as a separate projection it was inlined: 4 `split(` nodes
+      in the physical plan and a 2.5× end-to-end slowdown at 600k docs);
     - dedup is per-document, so it is `array_distinct` INSIDE the row —
       a global `.distinct()` after explode would shuffle the entire
       shingle multiset (corpus-sized exchange + hash aggregate) to

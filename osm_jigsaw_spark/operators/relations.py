@@ -16,7 +16,7 @@ geometrically; per-iteration localCheckpoint cuts lineage.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -87,8 +87,12 @@ def expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
 def outer_way_ids(relations: DataFrame, max_depth: int = 12) -> DataFrame:
     """(rel_id, way_id, pos) — outer ways of each relation, recursing through
     role='outer' sub-relations, circular refs silently skipped
-    (OuterWayResolver semantics). pos preserves member order for the
-    deterministic greedy stitcher.
+    (OuterWayResolver semantics). pos is the way's rank in depth-first
+    member order, the order the deterministic greedy stitcher reads.
+
+    Each row carries its member-position path from the root (the member
+    index at every level); sorting paths lexicographically gives
+    depth-first order exactly, at any depth and any member count.
     """
     members = relation_members(relations)
     outer = members.filter(F.col("role") == "outer")
@@ -99,16 +103,15 @@ def outer_way_ids(relations: DataFrame, max_depth: int = 12) -> DataFrame:
         F.col("rel_id").alias("root"),
         F.col("rel_id").alias("cur"),
         F.array(F.col("rel_id")).alias("path"),
-        F.lit(0.0).alias("base_pos"),
+        F.array().cast("array<int>").alias("pos_path"),
     )
     out = None
-    for depth in range(max_depth):
-        # ways at this level; fractional pos keeps nested ordering stable
+    for _ in range(max_depth):
         w = frontier.join(way_members, frontier["cur"] == way_members["rel_id"]) \
             .select(
                 F.col("root").alias("rel_id"),
                 F.col("ref").alias("way_id"),
-                (F.col("base_pos") + F.col("pos") / F.lit(10_000.0 ** depth if depth else 1.0)).alias("pos"),
+                F.array_append("pos_path", F.col("pos")).alias("pos_path"),
             )
         out = w if out is None else out.unionByName(w)
         nxt = frontier.join(
@@ -117,9 +120,11 @@ def outer_way_ids(relations: DataFrame, max_depth: int = 12) -> DataFrame:
             "root",
             F.col("ref").alias("cur"),
             F.expr("array_append(path, ref)").alias("path"),
-            (F.col("base_pos") + F.col("pos")).alias("base_pos"),
+            F.array_append("pos_path", F.col("pos")).alias("pos_path"),
         )
         if nxt.isEmpty():
             break
         frontier = nxt.localCheckpoint(eager=True)
-    return out
+    order = Window.partitionBy("rel_id").orderBy("pos_path")
+    return out.select(
+        "rel_id", "way_id", F.dense_rank().over(order).alias("pos"))

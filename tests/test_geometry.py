@@ -83,6 +83,19 @@ def test_normalize_ring_rotation_direction():
         ny, nx = normalize_ring(*other)
         assert np.array_equal(base[0], ny) and np.array_equal(base[1], nx)
 
+    # the minimum vertex P repeats: [P,a,P,b,P,c], and a two-visit pinch
+    # (figure-eight through P); every rotation, either way, is one form
+    p, a, b, c = (0.0, 0.0), (1.0, 5.0), (2.0, 3.0), (3.0, 1.0)
+    pinch = [p, (1.0, 1.0), (2.0, 0.5), p, (1.0, -1.0), (2.0, -0.5)]
+    for ring in ([p, a, p, b, p, c], pinch):
+        ry, rx = np.array(ring).T
+        base = normalize_ring(ry, rx)
+        for k in range(len(ring)):
+            for y, x in ((np.roll(ry, k), np.roll(rx, k)),
+                         (np.roll(ry[::-1], k), np.roll(rx[::-1], k))):
+                ny, nx = normalize_ring(y, x)
+                assert np.array_equal(base[0], ny) and np.array_equal(base[1], nx)
+
 
 @pytest.mark.parametrize("pts,expected", [
     ([(0, 0), (0, 2), (1, 2), (1, 0)], True),    # axis rect, clockwise

@@ -80,3 +80,42 @@ def test_reversed_way_stitching(spark):
     assert len(out) == 1
     assert out[0]["way_ids"] == [10, -11, 12]
     assert out[0]["node_ids"] == [1, 2, 2, 3, 3, 1]
+
+
+REL_SCHEMA = ("rel_id long, members array<struct<kind:string, ref:long, "
+              "role:string, pos:int>>, tags map<string,string>")
+
+
+def _relation(rel_id, members):
+    return (rel_id, [(kind, ref, "outer", i)
+                     for i, (kind, ref) in enumerate(members)], {})
+
+
+def _outer_order(spark, relations, root):
+    df = spark.createDataFrame(relations, REL_SCHEMA)
+    rows = outer_way_ids(df).filter(F.col("rel_id") == root).collect()
+    assert len({r.pos for r in rows}) == len(rows), "pos collides"
+    return [r.way_id for r in sorted(rows, key=lambda r: r.pos)]
+
+
+def test_outer_way_order_is_depth_first_at_depth_two(spark):
+    # root [wA, R1, wB, wE], R1 = [wC, R2], R2 = [wD]: a sub-sub-relation's
+    # way must not share an order key with the root's later members
+    wa, wb, wc, wd, we = 1, 2, 3, 4, 5
+    rels = [
+        _relation(10, [("way", wa), ("rel", 11), ("way", wb), ("way", we)]),
+        _relation(11, [("way", wc), ("rel", 12)]),
+        _relation(12, [("way", wd)]),
+    ]
+    assert _outer_order(spark, rels, 10) == [wa, wc, wd, wb, we]
+
+
+def test_outer_way_order_past_10k_members(spark):
+    # root [R1, wX]; R1 has 10,001 ways: its last way must still sort
+    # before wX
+    n = 10_001
+    rels = [
+        _relation(10, [("rel", 11), ("way", 99_999)]),
+        _relation(11, [("way", 1 + i) for i in range(n)]),
+    ]
+    assert _outer_order(spark, rels, 10) == [1 + i for i in range(n)] + [99_999]

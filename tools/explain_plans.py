@@ -1,7 +1,8 @@
 """Physical-plan audit: count, per headline query, the plan properties
 that matter at 100 TB — pushed filters, broadcast joins, AQE nodes,
-codegen spans, Arrow eval nodes. tests/test_plan_invariants.py enforces
-the ones that must hold; `df.explain("formatted")` shows a full plan.
+codegen spans, Arrow eval nodes, higher-order-function lambdas.
+tests/test_plan_invariants.py enforces the ones that must hold;
+`df.explain("formatted")` shows a full plan.
 
 Usage: python tools/explain_plans.py [sf_dir] > PLANS.md
 """
@@ -34,6 +35,10 @@ MARKERS = {
     "SortMergeJoin": r"SortMergeJoin",
     "CartesianProduct (bad!)": r"CartesianProduct",
     "Exchange (shuffle)": r"\) Exchange\b",
+    # interpreted higher-order-function lambdas: a count that grows with
+    # each reference to an array expression flags re-evaluation (README
+    # "Scale design", let-binding rule)
+    "Lambdas": r"lambdafunction",
 }
 
 
