@@ -43,8 +43,7 @@ from osm_jigsaw_spark.operators.knn import knn_areas
 from osm_jigsaw_spark.operators.naming import name_points
 from osm_jigsaw_spark.operators.paths import enumerate_all_paths
 from osm_jigsaw_spark.operators.containment import topo_order
-from osm_jigsaw_spark.operators.relations import expansion_status, outer_way_ids
-from osm_jigsaw_spark.operators.rings import stitch_rings
+from osm_jigsaw_spark.operators.relations import expansion_status
 from osm_jigsaw_spark.operators.tiling import tile_assignments
 from osm_jigsaw_spark.plans.pipeline import run_pipeline
 from osm_jigsaw_spark.sources import documents as SD
@@ -268,23 +267,13 @@ def q_expansion_status(spark, sf_dir):
 
 
 def q_ring_counts(spark, sf_dir):
-    fx = _fx(spark)
-    named = fx["pipe"].relations.filter(SD.has_name(F.col("tags")))
-    ok = expansion_status(named).filter("is_expandable").select("rel_id")
-    outer = outer_way_ids(named.join(ok, "rel_id", "left_semi"))
-    with_nodes = outer.join(
-        fx["pipe"].ways.select("way_id", "node_ids"), "way_id"
-    ).select("rel_id", "way_id", "pos", "node_ids")
-    rings = stitch_rings(with_nodes)
-    return rings.groupBy("rel_id").agg(
+    pipe = _fx(spark)["pipe"]
+    rings = OA.relation_rings(pipe.relations, pipe.ways)
+    return rings.groupBy("osm_id").agg(
         F.count("*").alias("n_rings"),
-        F.concat_ws(",", F.array_sort(F.collect_list("n_ways"))).alias(
-            "ring_sizes"),
-    ).select(
-        F.concat(F.col("rel_id").cast("string"), F.lit("R")).alias(
-            "rel_osm_id"),
-        "n_rings", "ring_sizes",
-    )
+        F.concat_ws(",", F.array_sort(
+            F.collect_list(F.size("way_ids")))).alias("ring_sizes"),
+    ).select(F.col("osm_id").alias("rel_osm_id"), "n_rings", "ring_sizes")
 
 
 def q_all_paths(spark, sf_dir):

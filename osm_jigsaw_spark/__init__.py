@@ -6,8 +6,8 @@ tonytw1/osm-jigsaw (reference at /root/reference) in idiomatic Spark:
 - the OSM entity stream becomes a ``documents`` table of interleaved text+media
   spans (doc_id, spans array<struct<kind,text,media_ref,offset>>), decoded with
   pure DataFrame ops (sources/documents.py);
-- ring stitching (reference resolving/OutlineBuilder.scala) is a grouped
-  Arrow/pandas UDF (operators/rings.py);
+- ring stitching (reference resolving/OutlineBuilder.scala) is one sorted
+  Arrow/pandas pass over all relations (operators/rings.py);
 - the containment DAG "graph sort" (reference graphing/GraphBuilder.scala) is a
   grid-cell-prefiltered spatial join + declarative transitive reduction
   (operators/containment.py) — no mutable object graph, no driver loop;

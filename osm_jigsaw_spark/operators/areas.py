@@ -5,8 +5,8 @@ Re-expresses the reference stages `areaways` + `areas`
 
 - way outlines: named *closed* ways become single-ring areas
   (resolving/AreaResolver.scala:26-40; predicate graphing/EntitiesToGraph.scala:8-14);
-- relation outlines: expansion-filtered relations → outer ways → stitched
-  rings (operators/relations.py + operators/rings.py);
+- relation outlines: one relation walk → outer ways of expandable
+  relations → stitched rings (operators/relations.py + operators/rings.py);
 - node resolution: the classic OSM "resolve geometry" shuffle — explode the
   node-id sequence with its position, equi-join the nodes table, reassemble
   ordered coordinate arrays with sort_array(collect_list(struct(pos,lat,lon)))
@@ -35,7 +35,7 @@ from pyspark.sql import types as T
 
 from ..functions.geometry import bbox_col, normalize_ring, shoelace_area_col
 from ..sources.documents import has_name
-from .relations import expansion_status, outer_way_ids
+from .relations import outer_ways, rejections, relation_walk
 from .rings import stitch_rings
 
 
@@ -50,14 +50,20 @@ def way_outlines(ways: DataFrame) -> DataFrame:
 
 def relation_rings(relations: DataFrame, ways: DataFrame) -> DataFrame:
     """Stitched rings of named, expandable relations:
-    (osm_id, ring_index, way_ids signed, node_ids)."""
+    (osm_id, ring_index, way_ids signed, node_ids).
+
+    One relation walk yields both the rejected roots and the outer ways;
+    ways stitch in member-position-path order."""
     named = relations.filter(has_name(F.col("tags")))
-    ok = expansion_status(named).filter("is_expandable").select("rel_id")
-    expandable = named.join(ok, "rel_id", "left_semi")
-    outer = outer_way_ids(expandable)
+    walk = relation_walk(named)
+    # few roots are rejected: broadcast them, so the anti-join adds no
+    # shuffle in front of the stitch's repartition
+    rejected = F.broadcast(
+        rejections(walk).select(F.col("root").alias("rel_id")))
+    outer = outer_ways(walk).join(rejected, "rel_id", "left_anti")
     with_nodes = outer.join(
         ways.select("way_id", "node_ids"), "way_id", "inner"
-    ).select("rel_id", "way_id", "pos", "node_ids")
+    ).select("rel_id", "way_id", F.col("pos_path").alias("pos"), "node_ids")
     rings = stitch_rings(with_nodes)
     return rings.select(
         F.concat(F.col("rel_id").cast("string"), F.lit("R")).alias("osm_id"),
@@ -277,12 +283,12 @@ def build_areas(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
     per ring sharing the relation's osm_id (reference AreaResolver emits one
     ResolvedArea per outline ring).
 
-    has_relations: caller hint for skipping the relation sub-plan (iterative
-    expansion + grouped stitching ≈ 10 stages) on relation-free inputs.
-    None (default) keeps plan construction fully lazy and includes the
-    branch; pass False only when the input is known relation-free (e.g. the
-    synthetic bench corpus) — an eager isEmpty() probe here would launch a
-    Spark job on every pipeline build (ADVICE r1)."""
+    has_relations: caller hint for skipping the relation sub-plan (the
+    relation walk, which materializes its levels when called, + sorted
+    stitching) on relation-free inputs. None (default) includes the branch;
+    pass False only when the input is known relation-free (e.g. the
+    synthetic bench corpus) — an eager isEmpty() probe of the input here
+    would launch a Spark job on every pipeline build (ADVICE r1)."""
     outlines = way_outlines(ways)
     if has_relations is not False:
         outlines = outlines.unionByName(relation_outlines(relations, ways))

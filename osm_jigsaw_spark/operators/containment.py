@@ -45,6 +45,7 @@ from ..functions.geometry import (
     rect_ring_col,
     ring_contains_rings_batch,
 )
+from ..plans.snapshots import frontier_loop
 
 ROOT_ID = "-1"  # synthetic root osm_id (reference uses area id -1)
 
@@ -195,23 +196,19 @@ def graph_edges(areas: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
 
 
 def node_depths(edges: DataFrame, max_depth: int = 64) -> DataFrame:
-    """(area_key, depth) — max root-distance per node; iterative join with
-    per-level localCheckpoint (the reference's BFS-by-depth queue,
-    GraphBuilder.scala:30-52, as a bounded driver loop)."""
+    """(area_key, depth) — max root-distance per node; a bounded
+    level-by-level walk (plans.snapshots.frontier_loop: the reference's
+    BFS-by-depth queue, GraphBuilder.scala:30-52, as a driver loop)."""
     e = edges.select("parent_key", "child_key")
-    frontier = e.filter(F.col("parent_key") == ROOT_ID) \
-                .select(F.col("child_key").alias("area_key"), F.lit(1).alias("depth"))
-    all_depths = frontier
-    for _ in range(max_depth):
-        frontier = (
-            frontier.join(e, frontier["area_key"] == e["parent_key"])
+    seed = e.filter(F.col("parent_key") == ROOT_ID) \
+        .select(F.col("child_key").alias("area_key"), F.lit(1).alias("depth"))
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return frontier.join(e, frontier["area_key"] == e["parent_key"]) \
             .select(F.col("child_key").alias("area_key"),
                     (F.col("depth") + 1).alias("depth"))
-        )
-        if frontier.isEmpty():
-            break
-        frontier = frontier.localCheckpoint(eager=True)
-        all_depths = all_depths.unionByName(frontier)
+
+    all_depths = frontier_loop(seed, step, max_depth + 1)
     return all_depths.groupBy("area_key").agg(F.max("depth").alias("depth"))
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..functions.batches import whole_groups
 from ..functions.geometry import pip_col
 from ..plans.snapshots import snapshot
 from .containment import ROOT_ID, area_cell_index
@@ -107,27 +108,10 @@ def _enumerate_point(point_id, parents, childs, osms, out):
             stack.append((c, path + [osm], keys + [c]))
 
 
-def _whole_points(batches):
-    """Re-chunk Arrow batches sorted by point_id so no point's rows straddle
-    two chunks: each batch's trailing point is held back and prepended to
-    the next batch, and the last held-back point follows the final batch."""
-    carry = None
-    for pdf in batches:
-        if carry is not None:
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if len(pdf) == 0:
-            continue
-        last = pdf["point_id"] == pdf["point_id"].iloc[-1]
-        carry = pdf[last]
-        yield pdf[~last]
-    if carry is not None:
-        yield carry
-
-
 def _enumerate_batches(batches):
     """mapInPandas worker: rows arrive sorted by point_id within the
     partition; enumerates each point's paths once all its rows are in."""
-    for pdf in _whole_points(batches):
+    for pdf in whole_groups(batches, "point_id"):
         out: list = []
         for pid, grp in pdf.groupby("point_id", sort=False):
             _enumerate_point(pid, grp["parent_key"].to_numpy(),

@@ -2,8 +2,8 @@
 
 - enumerate_all_paths re-expresses the output module's full trace dump
   (osm-jigsaw-output/src/main/scala/Main.scala:27-70): every root-to-leaf
-  path, grouped by leaf. Iterative frontier join bounded by graph depth,
-  lineage cut per level.
+  path, grouped by leaf. A bounded level-by-level frontier join
+  (plans.snapshots.frontier_loop), one snapshot per level.
 - walk_path re-expresses the API's nodesFor id-chain follow
   (osm-jigsaw-api/app/controllers/Application.scala:79-106): validate a
   given root-first id chain edge by edge; the walk stops at the first
@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.snapshots import frontier_loop
 from .containment import ROOT_ID
 
 
@@ -29,29 +30,21 @@ def enumerate_all_paths(edges: DataFrame, max_depth: int = 64) -> DataFrame:
         F.col("child_key").alias("b_child"),
         F.col("child_osm_id").alias("b_osm"),
     )
-    frontier = e.filter(F.col("parent_key") == ROOT_ID).select(
+    seed = e.filter(F.col("parent_key") == ROOT_ID).select(
         F.col("child_key").alias("node"),
         F.array(F.col("child_osm_id")).alias("path"),
     )
-    results = None
-    for _ in range(max_depth):
-        if frontier.isEmpty():
-            break
-        frontier = frontier.localCheckpoint(eager=True)
-        terminals = frontier.join(
-            parents, frontier["node"] == parents["pk"], "left_anti"
-        ).select(
-            F.element_at("path", -1).alias("leaf_osm_id"), "path")
-        results = terminals if results is None else results.unionByName(terminals)
-        frontier = frontier.join(eb, frontier["node"] == eb["b_parent"]) \
-            .select(
-                F.col("b_child").alias("node"),
-                F.array_append("path", F.col("b_osm")).alias("path"),
-            )
-    if results is None:
-        return edges.sparkSession.createDataFrame(
-            [], "leaf_osm_id string, path array<string>")
-    return results
+
+    def step(frontier: DataFrame) -> DataFrame:
+        return frontier.join(eb, frontier["node"] == eb["b_parent"]).select(
+            F.col("b_child").alias("node"),
+            F.array_append("path", F.col("b_osm")).alias("path"),
+        )
+
+    walked = frontier_loop(seed, step, max_depth)
+    return walked.join(
+        parents, walked["node"] == parents["pk"], "left_anti"
+    ).select(F.element_at("path", -1).alias("leaf_osm_id"), "path")
 
 
 def walk_path(edges: DataFrame, osm_id_chain: list[str]) -> DataFrame:

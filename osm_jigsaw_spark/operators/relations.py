@@ -1,17 +1,35 @@
-"""Relation expansion + outer-way resolution as iterative DataFrame joins.
+"""Relation expansion + outer-way resolution as one bounded walk.
 
-Replaces the reference's recursive in-heap walks:
+The reference resolves relations with two recursive in-heap walks:
 - RelationExpander.expandRelation (resolving/RelationExpander.scala:13-39):
   follows ALL relation-type members; a cycle or missing sub-relation rejects
   the whole root relation (no areas) and records it;
 - OuterWayResolver.resolveOuterWayIdsFor (resolving/OuterWayResolver.scala:10-36):
   follows only role='outer' members; silently skips circular references.
 
-Both become bounded driver loops over self-equi-joins with a `path`
-array<long> accumulator for cycle detection (array_contains(path, ref)).
-Each iteration is one shuffle on rel_id; depth is bounded (OSM relation
-nesting is shallow — max_depth=12 default). At scale the frontier shrinks
-geometrically; per-iteration localCheckpoint cuts lineage.
+Here both are one walk over every member (`relation_walk`). A row is one
+member reached from a root along one path of sub-relations, and carries:
+- `path`, the relations from the root down to the member's parent, for
+  cycle detection (a rel member already on its path is a cycle and is not
+  followed);
+- `pos_path`, the member index at every level; sorting paths
+  lexicographically gives depth-first member order at any depth;
+- `all_outer`, the AND of role='outer' along the path. The outer-role walk
+  is the all-member walk restricted to all-outer paths, so its ways are
+  the walk's `all_outer` way rows: cycles are skipped the same way, and a
+  missing sub-relation has no members to contribute.
+
+Level 1 is the member table itself, with no join. Each later level joins
+the previous level's relation refs (those not on their path) with the
+relations table; a sub-relation missing from it shows up in that join as
+a kind='missing' row, so the missing-ref check needs no join of its own.
+Cycle and missing rows give `expansion_status`'s rejected roots.
+
+Levels are materialized by `plans.snapshots.frontier_loop`, which
+snapshots each level before testing its relation refs for emptiness: each
+level's join runs once, and a walk of depth-1 relations runs no join at
+all. Depth is bounded (OSM relation nesting is shallow — max_depth=12
+levels).
 """
 
 from __future__ import annotations
@@ -19,12 +37,76 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.snapshots import frontier_loop
+
+
+def _on_path():
+    """A rel member already on its own path: a cycle."""
+    return F.array_contains("path", F.col("ref"))
+
 
 def relation_members(relations: DataFrame) -> DataFrame:
     """(rel_id, kind, ref, role, pos) exploded member table."""
     return relations.select(
         "rel_id", F.explode("members").alias("m")
     ).select("rel_id", "m.kind", "m.ref", "m.role", "m.pos")
+
+
+def relation_walk(relations: DataFrame, max_depth: int = 12) -> DataFrame:
+    """(root, kind, ref, path array<long>, pos_path array<int>, all_outer)
+    — every member reachable from each relation, one row per member per
+    path, members of at most `max_depth` nesting levels.
+
+    A sub-relation absent from `relations` adds one kind='missing' row (ref
+    = the absent id) one level below its reference. Level max_depth + 1 is
+    built only to find those, so it keeps only its 'missing' rows."""
+    first = relation_members(relations).select(
+        F.col("rel_id").alias("root"), "kind", "ref",
+        F.array("rel_id").alias("path"),
+        F.array("pos").alias("pos_path"),
+        F.col("role").eqNullSafe("outer").alias("all_outer"),
+    )
+    found = relations.select(
+        F.col("rel_id").alias("cur"), "members", F.lit(True).alias("found"))
+
+    def step(frontier: DataFrame) -> DataFrame:
+        sub = frontier.select(
+            "root",
+            F.col("ref").alias("cur"),
+            F.array_append("path", F.col("ref")).alias("path"),
+            F.col("pos_path").alias("parent_pos"),
+            F.col("all_outer").alias("parent_outer"),
+        )
+        missing = F.col("found").isNull()
+        return sub.join(found, "cur", "left").select(
+            "root", "cur", "path", "parent_pos", "parent_outer",
+            missing.alias("missing"), F.explode_outer("members").alias("m"),
+        ).filter(F.col("missing") | F.col("m").isNotNull()).select(
+            "root",
+            F.when(F.col("missing"), F.lit("missing"))
+            .otherwise(F.col("m.kind")).alias("kind"),
+            F.when(F.col("missing"), F.col("cur"))
+            .otherwise(F.col("m.ref")).alias("ref"),
+            "path",
+            F.when(F.col("missing"), F.col("parent_pos"))
+            .otherwise(F.array_append("parent_pos", F.col("m.pos")))
+            .alias("pos_path"),
+            (F.col("parent_outer") & F.col("m.role").eqNullSafe("outer"))
+            .alias("all_outer"),
+        )
+
+    follow = (F.col("kind") == "rel") & ~_on_path()
+    walked = frontier_loop(first, step, max_depth + 1, follow)
+    return walked.filter(
+        (F.size("path") <= max_depth) | (F.col("kind") == "missing"))
+
+
+def rejections(walk: DataFrame) -> DataFrame:
+    """(root, hit_cycle) — one row per cycle (hit_cycle) or missing
+    sub-relation a root's walk meets; a root with any row is rejected."""
+    cycle = (F.col("kind") == "rel") & _on_path()
+    return walk.filter(cycle | (F.col("kind") == "missing")).select(
+        "root", cycle.alias("hit_cycle"))
 
 
 def expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
@@ -35,47 +117,11 @@ def expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
     hit_cycle marks the relations recorded in `recursive_relations`
     (steps/ExtractEntities.scala:14-18 analog).
     """
-    members = relation_members(relations)
-    rel_edges = members.filter(F.col("kind") == "rel").select(
-        F.col("rel_id").alias("parent"), F.col("ref").alias("child")
-    )
-    all_ids = relations.select(F.col("rel_id").alias("child")).distinct()
-
-    # frontier: (root, cur, path) — path includes cur
-    frontier = relations.select(
-        F.col("rel_id").alias("root"),
-        F.col("rel_id").alias("cur"),
-        F.array(F.col("rel_id")).alias("path"),
-    )
-    bad = relations.sparkSession.createDataFrame(
-        [], "root long, hit_cycle boolean")
-
-    for _ in range(max_depth):
-        step = frontier.join(
-            rel_edges, frontier["cur"] == rel_edges["parent"]
-        ).select("root", "child", "path")
-        if step.isEmpty():
-            break
-        cyc = step.filter(F.expr("array_contains(path, child)")) \
-                  .select("root", F.lit(True).alias("hit_cycle"))
-        missing = step.join(all_ids, "child", "left_anti") \
-                      .select("root", F.lit(False).alias("hit_cycle"))
-        bad = bad.unionByName(cyc).unionByName(missing)
-        frontier = (
-            step.filter(~F.expr("array_contains(path, child)"))
-            .join(all_ids, "child", "left_semi")
-            .select(
-                "root",
-                F.col("child").alias("cur"),
-                F.expr("array_append(path, child)").alias("path"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    bad_roots = bad.groupBy("root").agg(F.max("hit_cycle").alias("hit_cycle"))
+    bad = rejections(relation_walk(relations, max_depth)).groupBy("root") \
+        .agg(F.max("hit_cycle").alias("hit_cycle"))
     return (
         relations.select("rel_id")
-        .join(bad_roots, relations["rel_id"] == bad_roots["root"], "left")
+        .join(bad, relations["rel_id"] == bad["root"], "left")
         .select(
             "rel_id",
             F.col("root").isNull().alias("is_expandable"),
@@ -84,47 +130,19 @@ def expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
     )
 
 
+def outer_ways(walk: DataFrame) -> DataFrame:
+    """(rel_id, way_id, pos_path) — the walk's ways reached along all-outer
+    paths."""
+    return walk.filter((F.col("kind") == "way") & F.col("all_outer")).select(
+        F.col("root").alias("rel_id"), F.col("ref").alias("way_id"),
+        "pos_path")
+
+
 def outer_way_ids(relations: DataFrame, max_depth: int = 12) -> DataFrame:
     """(rel_id, way_id, pos) — outer ways of each relation, recursing through
     role='outer' sub-relations, circular refs silently skipped
     (OuterWayResolver semantics). pos is the way's rank in depth-first
-    member order, the order the deterministic greedy stitcher reads.
-
-    Each row carries its member-position path from the root (the member
-    index at every level); sorting paths lexicographically gives
-    depth-first order exactly, at any depth and any member count.
-    """
-    members = relation_members(relations)
-    outer = members.filter(F.col("role") == "outer")
-    way_members = outer.filter(F.col("kind") == "way")
-    rel_members_outer = outer.filter(F.col("kind") == "rel")
-
-    frontier = relations.select(
-        F.col("rel_id").alias("root"),
-        F.col("rel_id").alias("cur"),
-        F.array(F.col("rel_id")).alias("path"),
-        F.array().cast("array<int>").alias("pos_path"),
-    )
-    out = None
-    for _ in range(max_depth):
-        w = frontier.join(way_members, frontier["cur"] == way_members["rel_id"]) \
-            .select(
-                F.col("root").alias("rel_id"),
-                F.col("ref").alias("way_id"),
-                F.array_append("pos_path", F.col("pos")).alias("pos_path"),
-            )
-        out = w if out is None else out.unionByName(w)
-        nxt = frontier.join(
-            rel_members_outer, frontier["cur"] == rel_members_outer["rel_id"]
-        ).filter(~F.expr("array_contains(path, ref)")).select(
-            "root",
-            F.col("ref").alias("cur"),
-            F.expr("array_append(path, ref)").alias("path"),
-            F.array_append("pos_path", F.col("pos")).alias("pos_path"),
-        )
-        if nxt.isEmpty():
-            break
-        frontier = nxt.localCheckpoint(eager=True)
+    member order, the order the deterministic greedy stitcher reads."""
     order = Window.partitionBy("rel_id").orderBy("pos_path")
-    return out.select(
+    return outer_ways(relation_walk(relations, max_depth)).select(
         "rel_id", "way_id", F.dense_rank().over(order).alias("pos"))

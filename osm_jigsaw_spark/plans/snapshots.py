@@ -10,11 +10,18 @@ at local[16]: a barrier is read by several branches, and each read
 re-decodes parquet's nested geometry arrays, while localCheckpoint serves
 re-reads from block-manager memory (BENCH_APPENDIX.md). Durable resume
 points that must survive the JVM are parquet via plans/checkpoints.py.
+
+`frontier_loop` is the one bounded level-by-level walk (relation
+expansion, node depths, path enumeration). Each level is snapshotted
+before its frontier is tested for emptiness, so the test reads
+materialized rows and every level's join runs once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 
 
 def snapshot(df: DataFrame, name: str = "snap") -> DataFrame:
@@ -30,3 +37,22 @@ def release(snap: DataFrame) -> None:
     registered with the cache manager, pyspark 4.1), so this unpersists the
     RDD under the snapshot's LogicalRDD. The snapshot is unreadable after."""
     snap._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
+def frontier_loop(seed: DataFrame, step: Callable[[DataFrame], DataFrame],
+                  max_depth: int, follow: Column | None = None) -> DataFrame:
+    """Union of the levels of a bounded breadth-first walk. `seed` is level
+    1; `step(frontier)` builds the next level from the rows of a
+    snapshotted level that match `follow` (all rows when None). At most
+    `max_depth` levels are built, and the walk stops at the first empty
+    frontier. Every level is a snapshot, so the union reads materialized
+    rows."""
+    level = snapshot(seed)
+    walked = level
+    for _ in range(max_depth - 1):
+        frontier = level if follow is None else level.filter(follow)
+        if frontier.isEmpty():
+            break
+        level = snapshot(step(frontier))
+        walked = walked.unionByName(level)
+    return walked

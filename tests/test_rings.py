@@ -119,3 +119,45 @@ def test_outer_way_order_past_10k_members(spark):
         _relation(11, [("way", 1 + i) for i in range(n)]),
     ]
     assert _outer_order(spark, rels, 10) == [1 + i for i in range(n)] + [99_999]
+
+
+def test_stitch_carries_relations_across_arrow_batches(spark):
+    """Two rows per Arrow batch splits every relation's ways across
+    batches: the stitch must carry each split relation into the next batch
+    and flush the last one, giving the same rings as the default batch
+    size and as stitching each relation's ways in the driver."""
+    from osm_jigsaw_spark.operators.rings import _stitch_one
+
+    rows = []
+    for rel_id, n in [(1, 5), (2, 6), (3, 7), (4, 1), (5, 9)]:
+        base = 100 * rel_id
+        chain = [base + i for i in range(n)] + [base]
+        for i in range(n):
+            a, b = chain[i], chain[i + 1]
+            # every other way reversed; ways listed out of ring order
+            seg = [a, base + 50 + i, b] if i % 2 == 0 else [b, base + 50 + i, a]
+            rows.append((rel_id, base + i, (i * 3) % n, seg))
+    df = spark.createDataFrame(
+        rows, "rel_id long, way_id long, pos long, node_ids array<long>")
+
+    def run():
+        return sorted((r.rel_id, r.ring_index, r.n_ways, tuple(r.way_ids),
+                       tuple(r.node_ids)) for r in stitch_rings(df).collect())
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    default = run()
+    try:
+        spark.conf.set(key, "2")
+        small = run()
+    finally:
+        spark.conf.set(key, before)
+
+    out: list = []
+    for rel_id in sorted({r[0] for r in rows}):
+        ways = sorted((r for r in rows if r[0] == rel_id), key=lambda r: r[2])
+        _stitch_one(rel_id, [w[1] for w in ways], [w[3] for w in ways], out)
+    want = sorted((a, b, c, tuple(d), tuple(e)) for a, b, c, d, e in out)
+    assert small == default == want
+    assert {r[0] for r in want} == {1, 2, 3, 4, 5}
+    assert max(r[2] for r in want) >= 5
