@@ -52,15 +52,19 @@ def relation_rings(relations: DataFrame, ways: DataFrame) -> DataFrame:
     """Stitched rings of named, expandable relations:
     (osm_id, ring_index, way_ids signed, node_ids).
 
-    One relation walk yields both the rejected roots and the outer ways;
-    ways stitch in member-position-path order."""
+    One relation walk yields both the rejected relations and the outer
+    ways; ways stitch in member-position-path order. A way is kept when no
+    relation on its path is rejected: not its root, and not a sub-relation
+    whose own walk meets a cycle or missing ref lying past the root's depth
+    bound (outer resolution treats a rejected relation as absent)."""
     named = relations.filter(has_name(F.col("tags")))
     walk = relation_walk(named)
-    # few roots are rejected: broadcast them, so the anti-join adds no
-    # shuffle in front of the stitch's repartition
-    rejected = F.broadcast(
-        rejections(walk).select(F.col("root").alias("rel_id")))
-    outer = outer_ways(walk).join(rejected, "rel_id", "left_anti")
+    rejected = rejections(walk).select(F.col("root").alias("via")).distinct()
+    outer = outer_ways(walk)
+    blocked = outer.select(
+        "rel_id", "pos_path", F.explode("path").alias("via")
+    ).join(rejected, "via", "left_semi")
+    outer = outer.join(blocked, ["rel_id", "pos_path"], "left_anti")
     with_nodes = outer.join(
         ways.select("way_id", "node_ids"), "way_id", "inner"
     ).select("rel_id", "way_id", F.col("pos_path").alias("pos"), "node_ids")

@@ -19,17 +19,24 @@ member reached from a root along one path of sub-relations, and carries:
   the walk's `all_outer` way rows: cycles are skipped the same way, and a
   missing sub-relation has no members to contribute.
 
+The walk keeps only the rows its readers use: relation members on every
+path (expansion follows them all), missing-ref rows, and way members on
+all-outer paths. Node members and ways on other paths are dropped before
+each level is snapshotted, so the walk holds the rows the two walks held
+(relation edges along every path plus outer ways), however many
+ancestors a relation has.
+
 Level 1 is the member table itself, with no join. Each later level joins
 the previous level's relation refs (those not on their path) with the
 relations table; a sub-relation missing from it shows up in that join as
 a kind='missing' row, so the missing-ref check needs no join of its own.
 Cycle and missing rows give `expansion_status`'s rejected roots.
 
-Levels are materialized by `plans.snapshots.frontier_loop`, which
-snapshots each level before testing its relation refs for emptiness: each
-level's join runs once, and a walk of depth-1 relations runs no join at
-all. Depth is bounded (OSM relation nesting is shallow — max_depth=12
-levels).
+Levels are materialized by `plans.snapshots.frontier_loop`, which counts
+each level's followable relation refs in the job that snapshots the
+level: each level's join runs once, the emptiness test runs no job, and a
+walk of depth-1 relations runs no join at all. Depth is bounded (OSM
+relation nesting is shallow — max_depth=12 levels).
 """
 
 from __future__ import annotations
@@ -52,10 +59,18 @@ def relation_members(relations: DataFrame) -> DataFrame:
     ).select("rel_id", "m.kind", "m.ref", "m.role", "m.pos")
 
 
+def _used():
+    """The walk rows a reader uses: relation members and missing refs
+    (`rejections`), and ways on all-outer paths (`outer_ways`)."""
+    kind = F.col("kind")
+    return kind.isin("rel", "missing") | ((kind == "way") & F.col("all_outer"))
+
+
 def relation_walk(relations: DataFrame, max_depth: int = 12) -> DataFrame:
     """(root, kind, ref, path array<long>, pos_path array<int>, all_outer)
-    — every member reachable from each relation, one row per member per
-    path, members of at most `max_depth` nesting levels.
+    — the relation members, missing refs and all-outer ways reachable from
+    each relation, one row per member per path, members of at most
+    `max_depth` nesting levels.
 
     A sub-relation absent from `relations` adds one kind='missing' row (ref
     = the absent id) one level below its reference. Level max_depth + 1 is
@@ -65,7 +80,7 @@ def relation_walk(relations: DataFrame, max_depth: int = 12) -> DataFrame:
         F.array("rel_id").alias("path"),
         F.array("pos").alias("pos_path"),
         F.col("role").eqNullSafe("outer").alias("all_outer"),
-    )
+    ).filter(_used())
     found = relations.select(
         F.col("rel_id").alias("cur"), "members", F.lit(True).alias("found"))
 
@@ -93,7 +108,7 @@ def relation_walk(relations: DataFrame, max_depth: int = 12) -> DataFrame:
             .alias("pos_path"),
             (F.col("parent_outer") & F.col("m.role").eqNullSafe("outer"))
             .alias("all_outer"),
-        )
+        ).filter(_used())
 
     follow = (F.col("kind") == "rel") & ~_on_path()
     walked = frontier_loop(first, step, max_depth + 1, follow)
@@ -131,11 +146,11 @@ def expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
 
 
 def outer_ways(walk: DataFrame) -> DataFrame:
-    """(rel_id, way_id, pos_path) — the walk's ways reached along all-outer
-    paths."""
+    """(rel_id, way_id, pos_path, path) — the walk's ways reached along
+    all-outer paths."""
     return walk.filter((F.col("kind") == "way") & F.col("all_outer")).select(
         F.col("root").alias("rel_id"), F.col("ref").alias("way_id"),
-        "pos_path")
+        "pos_path", "path")
 
 
 def outer_way_ids(relations: DataFrame, max_depth: int = 12) -> DataFrame:

@@ -12,16 +12,18 @@ re-reads from block-manager memory (BENCH_APPENDIX.md). Durable resume
 points that must survive the JVM are parquet via plans/checkpoints.py.
 
 `frontier_loop` is the one bounded level-by-level walk (relation
-expansion, node depths, path enumeration). Each level is snapshotted
-before its frontier is tested for emptiness, so the test reads
-materialized rows and every level's join runs once.
+expansion, node depths, path enumeration). Each level is snapshotted, and
+the snapshot's own job counts the level's frontier rows (an observed
+metric), so every level's join runs once and the emptiness test runs no
+job of its own.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 def snapshot(df: DataFrame, name: str = "snap") -> DataFrame:
@@ -47,12 +49,18 @@ def frontier_loop(seed: DataFrame, step: Callable[[DataFrame], DataFrame],
     `max_depth` levels are built, and the walk stops at the first empty
     frontier. Every level is a snapshot, so the union reads materialized
     rows."""
-    level = snapshot(seed)
+    def counted(df: DataFrame) -> tuple[DataFrame, int]:
+        seen = Observation()
+        rows = F.count(F.lit(1) if follow is None else F.when(follow, 1))
+        snap = snapshot(df.observe(seen, rows.alias("n")))
+        return snap, seen.get["n"]
+
+    level, n = counted(seed)
     walked = level
     for _ in range(max_depth - 1):
-        frontier = level if follow is None else level.filter(follow)
-        if frontier.isEmpty():
+        if n == 0:
             break
-        level = snapshot(step(frontier))
+        level, n = counted(
+            step(level if follow is None else level.filter(follow)))
         walked = walked.unionByName(level)
     return walked

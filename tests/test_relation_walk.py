@@ -4,9 +4,10 @@
 separate walks (all-member expansion and outer-role resolution), kept
 verbatim as the oracle. Seeded random relation graphs exercise self-loops,
 longer cycles, missing sub-relations, diamonds, non-outer roles and
-nesting up to depth 6; one walk is cut short by its depth bound. The
-job-count guards pin the join-free first level on the depth-1 shape the
-benchmark world uses.
+nesting up to depth 6; one walk is cut short by its depth bound, and the
+ring composition runs on a chain nested past it. The job-count guards pin
+the join-free first level on the depth-1 shape the benchmark world uses,
+and one job per level of the frontier loop.
 """
 
 from __future__ import annotations
@@ -24,11 +25,12 @@ from osm_jigsaw_spark.operators.relations import (
     relation_members,
 )
 from osm_jigsaw_spark.operators.rings import stitch_rings
-from osm_jigsaw_spark.plans.snapshots import snapshot
+from osm_jigsaw_spark.plans.snapshots import frontier_loop, snapshot
 from osm_jigsaw_spark.sources.documents import has_name
 
 REL_SCHEMA = ("rel_id long, members array<struct<kind:string, ref:long, "
               "role:string, pos:int>>, tags map<string,string>")
+WAY_SCHEMA = "way_id long, node_ids array<long>"
 
 
 def _oracle_expansion_status(relations: DataFrame, max_depth: int = 12) -> DataFrame:
@@ -211,8 +213,31 @@ def test_one_walk_matches_two_walks(spark, seed, max_depth):
         _outer_orders(_oracle_outer_way_ids(rels, max_depth))
 
 
-def test_relation_rings_match_two_walk_composition(pipeline):
-    relations, ways = pipeline.relations, pipeline.ways
+def _deep_chain(spark, relations, ways, n: int = 14):
+    """relations/ways plus a named outer chain 700 → 701 → … → 700+n-1
+    whose last relation has a missing member. Each relation owns one closed
+    square way. With n=14 the missing ref lies past 700's and 701's depth
+    bound, so those two are expandable while 702… are rejected by their own
+    walks."""
+    chain, squares = [], []
+    for i in range(n):
+        r, w, n0 = 700 + i, 7000 + i, 70_000 + 10 * i
+        nxt = 700 + i + 1 if i < n - 1 else 99_999
+        chain.append((r, [("way", w, "outer", 0), ("rel", nxt, "outer", 1)],
+                      {"name": f"chain{i}"}))
+        squares.append((w, [n0, n0 + 1, n0 + 2, n0 + 3, n0]))
+    extra_rels = spark.createDataFrame(chain, REL_SCHEMA)
+    extra_ways = spark.createDataFrame(squares, WAY_SCHEMA)
+    return (relations.unionByName(extra_rels, allowMissingColumns=True),
+            ways.unionByName(extra_ways, allowMissingColumns=True))
+
+
+def test_relation_rings_match_two_walk_composition(spark, pipeline):
+    """The fixture world plus a chain nested deeper than the depth bound:
+    700 and 701 keep only the outer ways of expandable relations, as the
+    two-walk composition does (it resolves outer ways over the expandable
+    relations only)."""
+    relations, ways = _deep_chain(spark, pipeline.relations, pipeline.ways)
     named = relations.filter(has_name(F.col("tags")))
     ok = _oracle_expansion_status(named).filter("is_expandable").select("rel_id")
     outer = _oracle_outer_way_ids(named.join(ok, "rel_id", "left_semi"))
@@ -230,9 +255,11 @@ def test_relation_rings_match_two_walk_composition(pipeline):
     got = rows(A.relation_rings(relations, ways))
     assert got == rows(want)
     assert {r[0] for r in got} >= {"200R", "201R", "203R", "204R"}
-
-
-WAY_SCHEMA = "way_id long, node_ids array<long>"
+    chain = {}
+    for osm_id, _, way_ids, _ in got:
+        if osm_id.startswith("70"):
+            chain.setdefault(osm_id, []).extend(way_ids)
+    assert chain == {"700R": [7000, 7001], "701R": [7001]}
 
 
 def _depth_one_world(spark, n_rels: int):
@@ -282,3 +309,21 @@ def test_relation_free_outlines_empty(spark):
     assert out.schema == A.relation_outlines(rels, ways).schema
     assert [f.name for f in out.schema] == ["osm_id", "ring_index", "node_ids"]
     assert jobs <= 8, jobs
+
+
+def test_frontier_loop_runs_one_job_per_level(spark):
+    """Each level's snapshot job also counts its frontier: 4 levels plus
+    the empty fifth run 5 jobs, none of them an emptiness test. Only the
+    even ids are followed."""
+    seed = spark.range(10).select("id", F.lit(1).alias("depth"))
+
+    def step(frontier):
+        return frontier.filter(F.col("depth") < 4).select(
+            "id", (F.col("depth") + 1).alias("depth"))
+
+    walked, jobs = _jobs_of(spark, "frontier-loop", lambda: frontier_loop(
+        seed, step, 12, F.col("id") % 2 == 0))
+    got = sorted(tuple(r) for r in walked.collect())
+    assert got == sorted([(i, 1) for i in range(10)]
+                         + [(i, d) for i in range(0, 10, 2) for d in (2, 3, 4)])
+    assert jobs == 5, jobs
