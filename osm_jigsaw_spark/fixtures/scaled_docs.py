@@ -222,7 +222,8 @@ def boilerplate_text_docs(spark: SparkSession, n_docs: int,
     IDENTICAL boilerplate text (licence headers / scraped nav chrome at web
     scale), the rest the uniform scaled_text_docs content. Every boilerplate
     doc lands in the same LSH band buckets, so the bucket cap must engage
-    (lsh_oversized_buckets discloses it) or the self-join is O((n*pct)²)."""
+    (lsh_oversized_buckets discloses it) or one bucket lists O((n*pct)²)
+    pairs."""
     uniform = scaled_text_docs(spark, n_docs, n_tokens)
     boiler = F.concat_ws(" ", F.array(*[
         F.substring(F.md5(F.lit(f"boilerplate:{j}")), 1, 6)

@@ -5,12 +5,14 @@ only dedup is the geometric area dedup, steps/RenderAndDeduplicateAreas.scala).
 All four are shuffle-conscious:
 
 - exact: one groupBy on md5(text) (map-side partial agg; 32-byte keys);
-- MinHash+LSH: shingle explode → K portable min-hashes via a broadcast
-  parameter table → banding → candidates only where a band collides →
-  exact-Jaccard verification join. Never an all-pairs product.
+- MinHash+LSH: K portable min-hashes per row (one `aggregate` over the
+  doc's shingle-hash array) → banding → candidate pairs listed inside each
+  capped band bucket (bucket_pairs: one exchange, no self-join) → exact
+  Jaccard by `array_intersect` of the pair's two arrays. Never an
+  all-pairs product.
 - SimHash: per-row 48-bit sign-sum via one `aggregate` over the token-hash
-  array (no explode, no crossJoin), near-dup candidates from 12-bit chunk
-  collisions, Hamming verify via bit_count(xor).
+  array (no explode, no crossJoin), near-dup candidates listed inside
+  12-bit chunk buckets (bucket_pairs), Hamming verify via bit_count(xor).
 - n-gram Jaccard: shingle equi-join with per-pair counts; intended for
   bounded subsets / post-LSH verification at scale.
 
@@ -20,7 +22,7 @@ Everything is built-in columnar expressions on portable arithmetic
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.snapshots import snapshot
@@ -105,10 +107,9 @@ def hashed_shingle_arrays(documents: DataFrame,
     the one shared block manager, so snapshot bytes are the anti-scaling
     term (BENCH_APPENDIX pipeline decomposition); on a cluster they are
     the Iceberg write volume; (b) the md5 chain runs exactly once per
-    shingle, not once per downstream consumer branch (the LSH band
-    self-join does NOT share its exchange — the signature subtree runs
-    per branch); (c) the verification join keys on longs, not strings
-    (A/B figures: minhash_near_duplicates).
+    shingle, not once per downstream consumer (the signature pass and
+    the verification both read it); (c) the verification intersects
+    arrays of longs, not strings (A/B figures: minhash_near_duplicates).
 
     Distinctness carries over from the string dedup: a 60-bit collision
     WITHIN one doc (~n²/2^61, ~1e-14 at 300 shingles) is the only way
@@ -181,38 +182,62 @@ def _minhash_bands(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", "bk.band", "bk.key")
 
 
+def bucket_pairs(rows: DataFrame, bucket_cols: list[str], id_col: str,
+                 max_bucket: int) -> DataFrame:
+    """(a, b) distinct pairs of `id_col` values, a < b, that share a bucket
+    (equal `bucket_cols`) of at most max_bucket rows.
+
+    The banding definition of a candidate (Leskovec, Rajaraman & Ullman,
+    *Mining of Massive Datasets*, ch. 3) is a pair in one bucket, so each
+    bucket lists its own pairs and no self-join is needed. One exchange on
+    `bucket_cols` feeds both steps:
+    - a Window count (sort-based, so a hot bucket spills instead of being
+      gathered into one array) drops buckets over max_bucket. A
+      boilerplate-heavy corpus can put millions of rows on one key, and an
+      uncapped bucket of n rows emits n²/2 pairs;
+    - `groupBy(bucket_cols)` on that same partitioning collects each kept
+      bucket's sorted ids; `posexplode` gives each id a row and `explode`
+      of the ids after it gives its pairs. Both generators stream, so no
+      row holds more than one bucket's ids (≤ max_bucket), never its
+      n²/2 pairs.
+    `rows` is read once, so the signature subtree under it runs once.
+    Buckets repeat pairs (bands, chunks), hence the distinct. `id_col` may
+    be a struct whose first field is the id: it orders by that field, and
+    its other fields ride along with the pair.
+
+    The gain over a bucket self-join is reading `rows` once; it pays
+    where buckets are small and the signatures dominate (near_dup's
+    MinHash buckets hold 1 to 4 docs). Where buckets near the cap and the
+    pairs dominate, a pair costs about what the self-join's does on long
+    ids, and about twice as much on the SimHash struct ids (measured, with
+    peak memory: BENCH_APPENDIX.md, "In-bucket pairs vs bucket
+    self-join")."""
+    return (
+        rows.withColumn("bucket_n",
+                        F.count("*").over(Window.partitionBy(*bucket_cols)))
+        .filter(F.col("bucket_n") <= max_bucket)
+        .groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
+        .select(F.posexplode("ids").alias("i", "a"), "ids")
+        .select("a", F.explode(F.slice("ids", F.col("i") + 2,
+                                       F.size("ids"))).alias("b"))
+        # equal ids (one id twice in a bucket) are not a pair
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
 def lsh_candidates(signatures: DataFrame,
                    max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(doc_a, doc_b) pairs sharing ≥1 LSH band.
 
-    Buckets larger than max_bucket are excluded before the self-join: a
-    boilerplate-heavy corpus can put millions of docs on one band key, and
-    AQE skew-join only rebalances the shuffle — it cannot prevent the
-    O(n²) pair explosion itself. lsh_oversized_buckets() reports what was
-    skipped (no silent truncation).
-
-    The cap is a WINDOW count over the (band,key) exchange of the
-    signature pass. NOTE (measured this round): the two self-join branches
-    do NOT share that exchange (no ReusedExchange in the physical plan —
-    the branch subtrees differ after the rename), so the signature subtree
-    runs once per branch. With `signatures` built from a materialized
-    hashed shingle table (minhash_near_duplicates' structure) that costs
-    ~nothing extra."""
-    from pyspark.sql import Window
-    bands = _minhash_bands(signatures)
-    w = Window.partitionBy("band", "key")
-    flagged = (bands
-               .withColumn("bucket_n", F.count("*").over(w))
-               .filter(F.col("bucket_n") <= max_bucket)
-               .select("doc_id", "band", "key"))
-    other = flagged.select(
-        F.col("doc_id").alias("doc_b"), F.col("band"), F.col("key"))
-    return (
-        flagged.join(other, ["band", "key"])
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        .distinct()
-    )
+    Pairs are listed inside each (band, key) bucket (bucket_pairs): the
+    signatures are read once, with no self-join. Buckets larger than
+    max_bucket are skipped; lsh_oversized_buckets() reports them (no
+    silent truncation)."""
+    return bucket_pairs(_minhash_bands(signatures), ["band", "key"],
+                        "doc_id", max_bucket).select(
+        F.col("a").alias("doc_a"), F.col("b").alias("doc_b"))
 
 
 def lsh_oversized_buckets(signatures: DataFrame,
@@ -230,37 +255,38 @@ def jaccard_verify(h_arrays: DataFrame, pairs: DataFrame,
     pairs only, from the materialized hashed shingle arrays.
 
     The arrays are semi-joined down to the docs that appear in a candidate
-    pair BEFORE exploding — candidates are rare by construction (LSH
-    banding), so every downstream shuffle is candidate-sized, never
-    corpus-sized, and the intersection join keys on 8-byte longs."""
+    pair, so both joins that attach a pair's two arrays are
+    candidate-sized, never corpus-sized. The semi-join broadcasts the
+    pairs' ids as they are, 2 per pair: a distinct would cost a shuffle
+    and a job. At 2M candidate pairs (4 clusters of 1000 identical docs,
+    every bucket under the cap: 4M broadcast ids, ~64 MB as rows) wall
+    and peak RSS matched the distinct version's within run-to-run spread
+    (BENCH_APPENDIX.md, "In-bucket pairs vs bucket self-join"). The
+    intersection is `array_intersect` of the two arrays in the row: no
+    explode, no count aggregate, no size joins. Each array is distinct
+    (hashed_shingle_arrays), so this is the set Jaccard; a pair sharing no
+    shingle is not reported at any threshold."""
     docs_needed = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
     )
     pruned = h_arrays.join(F.broadcast(docs_needed), "doc_id", "left_semi")
-    sh = pruned.select("doc_id", F.explode("hshingles").alias("shingle"))
-    sizes = pruned.select(
-        "doc_id", F.size("hshingles").cast("long").alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(a, "doc_a").join(b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    a = pruned.select(F.col("doc_id").alias("doc_a"),
+                      F.col("hshingles").alias("ha"))
+    b = pruned.select(F.col("doc_id").alias("doc_b"),
+                      F.col("hshingles").alias("hb"))
+    # the intersection is let-bound (README "Scale design", let-binding
+    # rule) and exploding the filtered one-element array is the threshold
+    # filter, so no predicate pushed into the join re-evaluates it
+    scored = F.transform(
+        F.array(F.size(F.array_intersect("ha", "hb"))),
+        lambda n: F.when(n > 0, F.round(
+            n / (F.size("ha") + F.size("hb") - n), 6)))
     return (
-        inter.join(sizes.withColumnRenamed("doc_id", "doc_a")
-                   .withColumnRenamed("n", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc_id", "doc_b")
-              .withColumnRenamed("n", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 6),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        pairs.join(a, "doc_a").join(b, "doc_b")
+        .select("doc_a", "doc_b",
+                F.explode(F.filter(scored, lambda j: j >= threshold))
+                .alias("jaccard"))
     )
 
 
@@ -270,22 +296,22 @@ def minhash_near_duplicates(documents: DataFrame,
 
     Two explicit stage materializations (Iceberg-snapshot analogs on a
     cluster; localCheckpoint here):
-    - the per-doc shingle arrays feed the signature pass (twice — the
-      band self-join branches do NOT share their exchange; no
-      ReusedExchange in the physical plan) and the verification pass;
-    - the candidate pairs are referenced THREE times downstream (the
-      docs_needed union reads them twice, the verify probe once) — left
-      lazy, the whole band-join subtree would run three times, and a
+    - the per-doc shingle arrays feed the signature pass (read once:
+      lsh_candidates has no self-join) and the verification pass;
+    - the candidate pairs are read three times by the verify (the
+      docs_needed union reads them twice, the pair probe once) — left
+      lazy, the whole LSH subtree would run three times, and a
       merely-persisted (unmaterialized) input under the broadcast subtree
       can wedge the broadcast exchange altogether. They are tiny by
       construction; checkpointing them is free.
 
-    Measured against the alternatives (interleaved warm A/B, 600k docs,
-    local[16], identical output pairs; BENCH_APPENDIX.md): barriers over
-    STRING shingle arrays 86-108 s under load, signatures inline with no
-    arrays barrier 40 s, persist() instead of localCheckpoint 119 s, a
-    third barrier on the capped band table 19.5 s, this structure 17-29 s.
-    The barriers are constant-count jobs, not data-dependent ones."""
+    Measured against the alternatives when the candidates were a band
+    self-join (interleaved warm A/B, 600k docs, local[16], identical
+    output pairs; BENCH_APPENDIX.md): barriers over STRING shingle arrays
+    86-108 s under load, signatures inline with no arrays barrier 40 s,
+    persist() instead of localCheckpoint 119 s, a third barrier on the
+    capped band table 19.5 s, this structure 17-29 s. The barriers are
+    constant-count jobs, not data-dependent ones."""
     harr = snapshot(hashed_shingle_arrays(documents), "harr")
     sigs = minhash_signatures(documents, h_arrays=harr)
     cands = snapshot(lsh_candidates(sigs), "cands")
@@ -367,30 +393,24 @@ def simhash_near_duplicates(documents: DataFrame,
 
     Chunk buckets larger than max_bucket are excluded (same O(n²)
     guard as lsh_candidates); simhash_oversized_buckets() discloses.
-    n_chunks=8 guarantees recall for hamming ≤ 7 (see _simhash_chunks)."""
-    sigs = simhash_signatures(documents)
-    chunks = _simhash_chunks(sigs, n_chunks)
-    small = (chunks.groupBy("c", "v")
-             .agg(F.count("*").alias("bucket_n"))
-             .filter(F.col("bucket_n") <= max_bucket)
-             .select("c", "v"))
-    chunks_ok = chunks.join(small, ["c", "v"])
-    other = chunks_ok.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"),
-        "c", "v")
-    cand = (
-        chunks_ok.join(other, ["c", "v"])
-        .filter(F.col("doc_id") < F.col("doc_b"))
-        .select(F.col("doc_id").alias("doc_a"), "doc_b",
-                F.col("simhash").alias("sim_a"), "sim_b")
-        .distinct()
-    )
+    n_chunks=8 guarantees recall for hamming ≤ 7 (see _simhash_chunks).
+
+    Candidates are listed in-bucket (bucket_pairs), so the signatures are
+    computed once: about 3× faster than a chunk self-join on buckets of a
+    few docs, about 2× slower on buckets near the cap, where each pair
+    carries its two simhash values (a 12-bit chunk has 4096 values, so
+    buckets near the cap from about 4M docs; BENCH_APPENDIX.md)."""
+    # the simhash rides in the bucketed id (ordered by doc_id), so the
+    # Hamming test needs no join back to the signatures
+    chunks = _simhash_chunks(simhash_signatures(documents), n_chunks).select(
+        "c", "v", F.struct("doc_id", "simhash").alias("ds"))
     return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))))
+        bucket_pairs(chunks, ["c", "v"], "ds", max_bucket)
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+                .alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
 
 

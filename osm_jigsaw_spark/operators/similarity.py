@@ -17,8 +17,9 @@ Training-data-pipeline extension (no reference analog):
   exact cosine only within matching buckets. Candidates shrink
   ~2^planes-fold; recall tunable by planes.
 - embedding_near_duplicates: banded sign-signature LSH (b bands × r
-  planes) → capped (band, sig) bucket self-join → pure-codegen columnar
-  cosine verify. No driver collect, no corpus broadcast, no all-pairs;
+  planes) → pairs listed inside each capped (band, sig) bucket
+  (dedup.bucket_pairs, no self-join) → pure-codegen columnar cosine
+  verify. No driver collect, no corpus broadcast, no all-pairs;
   embedding_near_duplicates_exact is the guarded small-scale baseline.
 
 All kernels are Arrow-batched numpy (no per-row Python), stay
@@ -34,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .dedup import bucket_pairs
 
 LSH_PLANES = 8  # signature bits
 
@@ -248,12 +251,17 @@ def embedding_near_duplicates(embeddings: DataFrame,
 
     Scale path (no driver collect, no corpus broadcast, no all-pairs):
 
-    1. banded sign signatures (band_signatures) — shuffle-free scan;
+    1. banded sign signatures (band_signatures) — shuffle-free scan,
+       run once (its mapInPandas has one consumer);
     2. bucket-size accounting: (band, sig) buckets larger than max_bucket
        are excluded from candidate generation (an n-doc hot bucket would
        emit n²/2 pairs on one shuffle key); oversized_buckets() reports
        what was skipped — no silent truncation;
-    3. candidate pairs via (band, sig) self-equi-join, distinct;
+    3. candidate pairs listed inside each kept bucket, distinct
+       (dedup.bucket_pairs: one exchange, no self-join). A band has 2^r
+       sig values, so buckets hold about n/2^r vectors; at a mean of
+       ~117 (30k vectors, one run each) wall and peak memory matched the
+       self-join's (BENCH_APPENDIX.md);
     4. exact cosine verify as a pure-codegen columnar expression
        (_cos_sim_col) after joining the pair ids back to the embeddings.
 
@@ -264,17 +272,9 @@ def embedding_near_duplicates(embeddings: DataFrame,
     so the gate checks the implementation, not the probabilistic recall —
     embedding_near_duplicates_exact is the exact reference for recall
     tests (tests/test_similarity.py)."""
-    sigs = band_signatures(embeddings, bands, planes_per_band)
-    small = (sigs.groupBy("band", "sig")
-             .agg(F.count("*").alias("bucket_n"))
-             .filter(F.col("bucket_n") <= max_bucket)
-             .select("band", "sig"))
-    sigs_ok = sigs.join(small, ["band", "sig"])
-    a = sigs_ok.select("band", "sig", F.col("vec_id").alias("vec_a"))
-    b = sigs_ok.select("band", "sig", F.col("vec_id").alias("vec_b"))
-    cand = (a.join(b, ["band", "sig"])
-            .filter(F.col("vec_a") < F.col("vec_b"))
-            .select("vec_a", "vec_b").distinct())
+    cand = bucket_pairs(band_signatures(embeddings, bands, planes_per_band),
+                        ["band", "sig"], "vec_id", max_bucket).select(
+        F.col("a").alias("vec_a"), F.col("b").alias("vec_b"))
     e = embeddings.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("v"))

@@ -19,6 +19,32 @@ def spark():
     yield s
 
 
+def _executed_plan_nodes(df) -> list:
+    """Run `df`, then (class name, operator details incl. aggregate result
+    expressions) of every node of its executed plan; under AQE only the
+    final plan is walked, descending into each query stage."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    stack, out = [plan], []
+    while stack:
+        node = stack.pop()
+        out.append((node.getClass().getSimpleName(),
+                    node.verboseStringWithOperatorId()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+        if node.getClass().getSimpleName().endswith("QueryStageExec"):
+            stack.append(node.plan())
+    return out
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """The executed-plan walker: plan_nodes(df) -> [(class, details)]."""
+    return _executed_plan_nodes
+
+
 @pytest.fixture(scope="session")
 def world():
     return build_world()

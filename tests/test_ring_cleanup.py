@@ -169,26 +169,8 @@ def test_large_ring_resolves_in_linear_time(spark):
     assert elapsed < LARGE_RING_BOUND_S, f"{n}-vertex ring took {elapsed:.1f}s"
 
 
-def _final_plan_text(df) -> str:
-    """Operator details (incl. aggregate result expressions) of every node
-    of the executed plan; under AQE only the final plan is walked."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        plan = plan.executedPlan()
-    stack, out = [plan], []
-    while stack:
-        node = stack.pop()
-        out.append(node.verboseStringWithOperatorId())
-        kids = node.children()
-        stack.extend(kids.apply(i) for i in range(kids.size()))
-        if node.getClass().getSimpleName().endswith("QueryStageExec"):
-            stack.append(node.plan())
-    return "\n".join(out)
-
-
 @pytest.mark.parametrize("with_filter", [False, True])
-def test_cleanup_evaluated_once(spark, pipeline, with_filter):
+def test_cleanup_evaluated_once(spark, pipeline, plan_nodes, with_filter):
     """At most 2 `filter(` lambdas in the executed plan of the fixture
     outlines (the previous formulation had 12): the cleanup is not
     re-run per reference, nor by a pushed-down n_points filter."""
@@ -201,4 +183,5 @@ def test_cleanup_evaluated_once(spark, pipeline, with_filter):
     rings = A.resolve_outline_points(outlines, nodes)
     if with_filter:
         rings = A.with_area_and_bbox(rings.filter(F.col("n_points") >= 3))
-    assert _final_plan_text(rings).count("filter(") <= 2
+    text = "\n".join(t for _c, t in plan_nodes(rings))
+    assert text.count("filter(") <= 2

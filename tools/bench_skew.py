@@ -11,7 +11,8 @@ Two deliberately hostile inputs, same sizes as the uniform bench world:
 - BOILERPLATE CORPUS: boilerplate_text_docs — 30% of docs share one
   identical text, so each LSH band has a bucket holding 0.3*n docs.
   Exercises the LSH_MAX_BUCKET cap + lsh_oversized_buckets disclosure in
-  operators/dedup.py: without the cap the band self-join is O((0.3n)²).
+  operators/dedup.py: without the cap one band bucket lists O((0.3n)²)
+  pairs.
 
 Reports min-of-reps wall time for the uniform and pathological variant of
 each pipeline plus the disclosure counts; the claim for BENCH_APPENDIX.md

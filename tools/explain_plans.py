@@ -44,11 +44,16 @@ MARKERS = {
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(app_name="explain", cores=8, shuffle_partitions=8)
+    # local[nproc], shuffle partitions = nproc, as perfbench/run.py sizes
+    # Spark: never a parallelism level above the CPUs this process may use
+    nproc = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="explain", cores=nproc,
+                      shuffle_partitions=nproc)
     qs = E.queries()
     print("# PLANS — physical-plan audit of headline queries\n")
     print("Generated by `python tools/explain_plans.py`: marker counts per "
-          "query in the executed physical plan. "
+          "query in the executed physical plan, at "
+          f"local[{nproc}] with {nproc} shuffle partitions (nproc {nproc}). "
           "`tests/test_plan_invariants.py` enforces the invariants.\n")
     print("| query | " + " | ".join(MARKERS) + " |")
     print("|---" * (len(MARKERS) + 1) + "|")
