@@ -89,14 +89,6 @@ def q_decode_nodes(spark, sf_dir):
     return SD.decode_nodes(_fx(spark)["docs"]).select("node_id", "lat", "lon")
 
 
-def q_decode_way_stats(spark, sf_dir):
-    return SD.decode_ways(_fx(spark)["docs"]).select(
-        "way_id",
-        F.size("node_ids").cast("long").alias("n_refs"),
-        "is_closed",
-    )
-
-
 def q_entity_stats(spark, sf_dir):
     e = SD.with_entity_cols(_fx(spark)["docs"])
     tagged = e.select(
@@ -559,19 +551,21 @@ def q_media_resize(spark, sf_dir):
         F.md5(F.lower(F.hex(F.col("thumb")))).alias("thumb_md5"))
 
 
+#: (stride_mode, centroid_stride) of the ivf_topk rows: a pinned stride,
+#: and the DEFAULT path (None → stride=ceil(sqrt(n)) derived from a corpus
+#: count), which users get without pinning parameters
+IVF_STRIDES = (("pinned", 31), ("auto", None))
+
+
 def q_ivf_topk(spark, sf_dir):
+    """IVF top-k at both stride modes, keyed by stride_mode (the oracle
+    derives the auto stride in SQL)."""
     emb = _t(spark, sf_dir, "embeddings")
-    return SIM.ivf_topk(emb, n_queries=20, k=5, centroid_stride=31,
-                        nprobe=4)
-
-
-def q_ivf_topk_auto(spark, sf_dir):
-    """IVF DEFAULT path: centroid_stride=None → stride=ceil(sqrt(n)) derived
-    from a corpus count — the path users get without pinning parameters
-    (the oracle derives the same stride in SQL)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return SIM.ivf_topk(emb, n_queries=20, k=5, centroid_stride=None,
-                        nprobe=4)
+    pinned, auto = (
+        SIM.ivf_topk(emb, n_queries=20, k=5, centroid_stride=stride,
+                     nprobe=4).select(F.lit(mode).alias("stride_mode"), "*")
+        for mode, stride in IVF_STRIDES)
+    return pinned.unionByName(auto)
 
 
 # ---------------------------------------------------------------------------
@@ -606,7 +600,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # spatial / graph engine (fixture world)
         "decode_nodes": q_decode_nodes,
-        "decode_way_stats": q_decode_way_stats,
         "entity_stats": q_entity_stats,
         "areas_table": q_areas_table,
         "graph_edges": q_graph_edges,
@@ -658,14 +651,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "frame_sample": q_frame_sample,
         "media_resize": q_media_resize,
         "ivf_topk": q_ivf_topk,
-        "ivf_topk_auto": q_ivf_topk_auto,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         "decode_nodes": O.sql_decode_nodes(),
-        "decode_way_stats": O.sql_decode_way_stats(),
         "entity_stats": O.sql_entity_stats(),
         "areas_table": O.sql_areas_table(),
         "graph_edges": O.sql_graph_edges(),
@@ -714,6 +705,8 @@ def oracle_sql() -> dict[str, str]:
         "media_features": O.SQL_MEDIA_FEATURES,
         "frame_sample": O.SQL_FRAME_SAMPLE,
         "media_resize": O.sql_media_resize(32),
-        "ivf_topk": O.sql_ivf_topk(20, 5, 31, 4),
-        "ivf_topk_auto": O.sql_ivf_topk(20, 5, None, 4),
+        "ivf_topk": "\nUNION ALL\n".join(
+            f"SELECT '{mode}' AS stride_mode, * FROM "
+            f"({O.sql_ivf_topk(20, 5, stride, 4)})"
+            for mode, stride in IVF_STRIDES),
     }

@@ -15,20 +15,15 @@ Headline queries:
                      testdata at $SPARK_GRAFT_SF_DIR
 
 The sandbox host is time-shared (firecracker, visible steal-time spikes), so
-wall-clock for a single run is noisy up to several-fold — and the noise
-bursts last MINUTES, longer than any single query. Two nested repeat knobs
-suppress it:
-
-- SPARK_GRAFT_BENCH_ROUNDS (default 3): the whole suite runs this many
-  times in one JVM and each query reports its MINIMUM across rounds. Rounds
-  of the same query are separated by a full suite pass (~the only way to
-  decorrelate from multi-minute noise bursts inside one process), and round
-  1 pays the one-time JVM/JIT warmup which the min then discards.
-- SPARK_GRAFT_BENCH_REPS (default 1): back-to-back in-place repeats of each
-  timed query before moving on (the round-1..4 mechanism; kept for the
-  scaling harness). The Spark cache is cleared between reps/rounds so every
-  timing recomputes the full plan (verified: a rep on a FRESH, different
-  lineage is as fast as a same-lineage rep — no shuffle/exchange reuse).
+wall-clock for a single run is noisy up to several-fold, and the noise
+bursts last MINUTES, longer than any single query. So the whole suite runs
+ROUNDS (3) times in one JVM and each query reports its MINIMUM across
+rounds. Rounds of the same query are separated by a full suite pass (the
+only way to decorrelate from multi-minute noise bursts inside one process),
+and round 1 pays the one-time JVM/JIT warmup which the min then discards.
+The Spark cache is cleared before every timing, so each one recomputes the
+full plan. Scaling evidence across parallelism levels comes from perfbench
+instead (tools/scaling.py).
 
 Why min-of-repeats and not single-shot: the FIRST execution of each heavy
 plan shape in a fresh JVM is dominated by one-time JVM/JIT warmup —
@@ -37,9 +32,7 @@ local[24], reproducible with whole-stage codegen disabled, with a warm
 Python-worker pool, and across engine versions. On a real cluster a job
 over 100 TB runs for hours and that warmup amortizes to nothing, so
 steady-state (warm) throughput is the quantity that predicts production
-behavior; round 1 pays the warmup and the min discards it. (VERDICT r4
-item 4: the single-shot face JSON contradicted the repo's quiet-window
-minima two rounds running — the default is now min-of-3.)
+behavior; round 1 pays the warmup and the min discards it.
 
 Stage barriers: every heavy materialization goes through
 plans/snapshots.snapshot() (localCheckpoint). Each round's spatial
@@ -47,7 +40,9 @@ snapshots are released when the round ends, so block-manager memory does
 not grow with the round count.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_AREAS and
+     SPARK_GRAFT_BENCH_POINTS (world and point-set sizes; the scale-variant
+     text and embedding inputs have as many rows as the world has areas).
 """
 
 from __future__ import annotations
@@ -84,14 +79,14 @@ from osm_jigsaw_spark.plans.pipeline import run_pipeline  # noqa: E402
 from osm_jigsaw_spark.plans.snapshots import release, snapshot  # noqa: E402
 from osm_jigsaw_spark.session import get_spark  # noqa: E402
 
+ROUNDS = 3  # whole-suite passes in one JVM; each query reports its minimum
+
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_areas = int(os.environ.get("SPARK_GRAFT_BENCH_AREAS", "20000"))
     n_points = int(os.environ.get("SPARK_GRAFT_BENCH_POINTS", "20000"))
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "1"))
-    rounds = int(os.environ.get("SPARK_GRAFT_BENCH_ROUNDS", "3"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1
 
     spark = get_spark(app_name="osm-jigsaw-bench", cores=cpus,
@@ -101,18 +96,13 @@ def main():
     state: dict[str, object] = {}
 
     def timed(name: str, fn) -> None:
-        best = None
-        best_extra: dict[str, float] = {}
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            out = fn() or {}
-            dt = time.time() - t0
-            if best is None or dt < best:
-                best, best_extra = dt, out
-        if name not in timings or best < timings[name]:
-            timings[name] = round(best, 3)
-            extra.update(best_extra)
+        spark.catalog.clearCache()
+        t0 = time.time()
+        out = fn() or {}
+        dt = time.time() - t0
+        if name not in timings or dt < timings[name]:
+            timings[name] = round(dt, 3)
+            extra.update(out)
 
     # --- scaled spatial world (generated IN Spark — no driver bottleneck)
     docs = snapshot(scaled_documents_df(spark, n_areas), "docs")
@@ -122,9 +112,8 @@ def main():
     from osm_jigsaw_spark.operators.dedup import minhash_near_duplicates
     from osm_jigsaw_spark.operators.similarity import brute_force_topk
 
-    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", str(n_areas)))
-    big_docs = snapshot(scaled_text_docs(spark, n_docs), "bigdocs")
-    big_emb = snapshot(scaled_embeddings(spark, n_docs), "bigemb")
+    big_docs = snapshot(scaled_text_docs(spark, n_areas), "bigdocs")
+    big_emb = snapshot(scaled_embeddings(spark, n_areas), "bigemb")
 
     # deterministic columnar point generation: identical input at every
     # parallelism level (no RNG, no partitioning dependence)
@@ -145,7 +134,7 @@ def main():
         state[key] = snap
         return snap
 
-    for _ in range(rounds):
+    for _ in range(ROUNDS):
         def f_pipeline():
             # scaled_documents_df emits only way+node docs — skip the
             # ~10-stage relation sub-plan via the caller hint (lazy, no
@@ -231,9 +220,8 @@ def main():
         "queries": timings,
         "sf": sf,
         "cpus": cpus,
-        "rounds": rounds,
-        "reps": reps,
-        "n_docs": n_docs,
+        "rounds": ROUNDS,
+        "n_docs": n_areas,
         "extra": extra,
     }))
 

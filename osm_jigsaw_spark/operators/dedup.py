@@ -154,7 +154,11 @@ def minhash_signatures(documents: DataFrame,
         lambda acc, h: F.zip_with(
             acc, params, lambda m, p: F.least(m, (p["a"] * h + p["b"]) % P)),
     )
-    return (h_arrays.filter(F.size("hshingles") > 0)
+    # exploding the filtered one-element array drops the empty docs, so no
+    # size() predicate pushed below the projection re-inlines the md5 chain
+    nonempty = F.explode(F.filter(F.array("hshingles"),
+                                  lambda h: F.size(h) > 0))
+    return (h_arrays.select("doc_id", nonempty.alias("hshingles"))
             .select("doc_id", sigs.alias("sigs")))
 
 

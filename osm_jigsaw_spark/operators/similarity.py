@@ -280,10 +280,13 @@ def embedding_near_duplicates(embeddings: DataFrame,
         F.transform("embedding", lambda x: x.cast("double")).alias("v"))
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"))
+    # exploding the filtered one-element array is the threshold filter, so
+    # no predicate pushed into the join evaluates the cosine a second time
+    scored = F.array(F.round(_cos_sim_col("va", "vb"), 6))
     return (cand.join(ea, "vec_a").join(eb, "vec_b")
-            .withColumn("cos_sim", F.round(_cos_sim_col("va", "vb"), 6))
-            .filter(F.col("cos_sim") >= threshold)
-            .select("vec_a", "vec_b", "cos_sim"))
+            .select("vec_a", "vec_b",
+                    F.explode(F.filter(scored, lambda c: c >= threshold))
+                    .alias("cos_sim")))
 
 
 def oversized_buckets(embeddings: DataFrame, bands: int = EMB_BANDS,

@@ -158,28 +158,6 @@ GROUP BY e.rid, e.canonical
 """
 
 
-def sql_decode_way_stats() -> str:
-    """(way_id, n_refs, is_closed) — decodes spans in OFFSET order (the
-    scrambled array order must not matter: per-row invariant)."""
-    return f"""
-WITH {fix_docs_cte()},
-sx AS (
-  SELECT doc_id, m['media_ref'] AS mr, m['offset'] AS off
-  FROM fixdocs, UNNEST(spans) AS t(m)
-  WHERE doc_id LIKE '%W' AND m['kind'] = 'media' AND m['media_ref'] LIKE 'node:%'
-),
-w AS (
-  SELECT doc_id,
-         array_agg(try_cast(substr(mr, 6) AS BIGINT) ORDER BY off) AS node_ids
-  FROM sx GROUP BY doc_id
-)
-SELECT try_cast(substr(doc_id, 1, length(doc_id)-1) AS BIGINT) AS way_id,
-       len(node_ids) AS n_refs,
-       (len(node_ids) > 2 AND node_ids[1] = node_ids[-1]) AS is_closed
-FROM w
-"""
-
-
 def sql_entity_stats() -> str:
     """A1 analog: per-type counts + named counts from the fixture docs."""
     return f"""

@@ -19,6 +19,17 @@ def test_closed_predicate(pipeline):
     assert ways[301] is True       # unnamed but closed
 
 
+def test_way_decode_matches_world(pipeline, world):
+    """Every way's node refs decode in span-offset order (the fixture
+    rotates each span array) and is_closed is AreaResolver's rule: more
+    than 2 refs, first equal to last."""
+    got = {r.way_id: (list(r.node_ids), r.is_closed) for r in
+           pipeline.ways.select("way_id", "node_ids", "is_closed").collect()}
+    want = {w.id: (w.node_ids, len(w.node_ids) > 2
+                   and w.node_ids[0] == w.node_ids[-1]) for w in world.ways}
+    assert got == want
+
+
 def test_tags_decode(pipeline):
     tags = {r["osm_id"]: dict(r["tags"]) for r in pipeline.tags.collect()}
     assert tags["100W"] == {"name": "Large"}

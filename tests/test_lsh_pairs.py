@@ -195,7 +195,8 @@ def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
     """Docs of 30 hex tokens, doc 10k+1 a copy of doc 10k with one token
     replaced, snapshotted as minhash_near_duplicates snapshots its input:
     here the band self-join ran the signature `aggregate` in both of its
-    branches (no ReusedExchange)."""
+    branches (no ReusedExchange), and a `size(hshingles) > 0` filter pushed
+    below the projection re-inlined the md5 shingle-hash chain."""
     src = ("IF(id % 10 = 1 AND j = id % 30, concat('x:', CAST(id AS STRING)),"
            " CAST(IF(id % 10 = 1, id - 1, id) AS STRING))")
     docs = snapshot(spark.range(100).selectExpr(
@@ -205,6 +206,7 @@ def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
     cands = D.lsh_candidates(D.minhash_signatures(docs))
     text = "\n".join(t for _c, t in plan_nodes(cands))
     assert text.count("aggregate(") == 1
+    assert text.count("md5(") == 1
     assert "Join" not in text
     assert cands.count() == 10
 
@@ -216,3 +218,5 @@ def test_embedding_near_duplicates_plan_has_one_map_in_pandas(spark,
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     nodes = plan_nodes(SIM.embedding_near_duplicates(emb, 0.5))
     assert sum(c == "MapInPandasExec" for c, _t in nodes) == 1
+    # one cosine per candidate: two norms, not a second copy in a filter
+    assert "\n".join(t for _c, t in nodes).count("SQRT(") == 2

@@ -43,6 +43,13 @@ def _plan_text(spark, df) -> str:
         return buf.getvalue()
 
 
+def test_registry_fits_the_gate_window():
+    """The driver gates only the first 50 registered queries, each against
+    its oracle_sql() twin."""
+    assert len(E.queries()) <= 50
+    assert set(E.queries()) == set(E.oracle_sql())
+
+
 @pytest.mark.parametrize("name", sorted(E.queries()))
 def test_no_scale_antipatterns(spark, name):
     df = E.queries()[name](spark, SF_DIR)

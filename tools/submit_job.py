@@ -4,9 +4,9 @@ The north rule requires the job to be launched via `spark-submit
 --py-files` at two cluster sizes. Package + launch:
 
     python tools/make_pyfiles.py                      # dist/osm_jigsaw_spark.zip
-    spark-submit --master local[8]  --py-files dist/osm_jigsaw_spark.zip \
+    spark-submit --master local[1] --py-files dist/osm_jigsaw_spark.zip \
         tools/submit_job.py --docs <documents.parquet> --out /tmp/run_n
-    spark-submit --master local[32] --py-files dist/osm_jigsaw_spark.zip \
+    spark-submit --master "local[$(nproc)]" --py-files dist/osm_jigsaw_spark.zip \
         tools/submit_job.py --docs <documents.parquet> --out /tmp/run_4n
 
 On a real cluster the only change is the master/deploy-mode flags
