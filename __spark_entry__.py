@@ -61,7 +61,6 @@ def _fx(spark: SparkSession) -> dict:
         world = build_world()
         docs = documents_df(spark, world).localCheckpoint(eager=True)
         r = run_pipeline(docs)
-        r.areas = r.areas.localCheckpoint(eager=True)
         r.graph_edges = r.graph_edges.localCheckpoint(eager=True)
         _CACHE[key] = {
             "world": world, "docs": docs, "pipe": r,

@@ -40,7 +40,8 @@ snapshots are released when the round ends, so block-manager memory does
 not grow with the round count.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_AREAS and
+     SPARK_GRAFT_CPUS (read by session.get_spark; default: the CPUs this
+     process may run on), SPARK_GRAFT_BENCH_AREAS and
      SPARK_GRAFT_BENCH_POINTS (world and point-set sizes; the scale-variant
      text and embedding inputs have as many rows as the world has areas).
 """
@@ -84,13 +85,11 @@ ROUNDS = 3  # whole-suite passes in one JVM; each query reports its minimum
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_areas = int(os.environ.get("SPARK_GRAFT_BENCH_AREAS", "20000"))
     n_points = int(os.environ.get("SPARK_GRAFT_BENCH_POINTS", "20000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1
 
-    spark = get_spark(app_name="osm-jigsaw-bench", cores=cpus,
-                      shuffle_partitions=cpus)
+    spark = get_spark(app_name="osm-jigsaw-bench")
     timings: dict[str, float] = {}
     extra: dict[str, float] = {}
     state: dict[str, object] = {}
@@ -139,8 +138,8 @@ def main():
             # scaled_documents_df emits only way+node docs — skip the
             # ~10-stage relation sub-plan via the caller hint (lazy, no
             # isEmpty() probe job; ADVICE r1)
-            pipe = run_pipeline(docs, cache=False, has_relations=False)
-            n = keep("areas", snapshot(pipe.areas, "areas")).count()
+            pipe = run_pipeline(docs, has_relations=False)
+            n = keep("areas", pipe.areas).count()
             return {"n_areas": n}
 
         timed("pipeline_areas", f_pipeline)
@@ -219,7 +218,7 @@ def main():
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpus": cpus,
+        "cpus": spark.sparkContext.defaultParallelism,
         "rounds": ROUNDS,
         "n_docs": n_areas,
         "extra": extra,

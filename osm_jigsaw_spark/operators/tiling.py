@@ -149,11 +149,6 @@ def tile_graph(edges: DataFrame, assignments: DataFrame) -> DataFrame:
     return inner.unionByName(rerooted)
 
 
-def tile_counts(spark: SparkSession, res: int) -> int:
-    """Grid-size parity helper (32/1,024/32,768 at res 1/2/3)."""
-    return C.geohash_tiles(spark, res).count()
-
-
 def write_tiled_segments(root: str, areas: DataFrame, edges: DataFrame,
                          tags: DataFrame, assignments: DataFrame) -> dict:
     """Partitioned per-tile output — the reference's per-geohash

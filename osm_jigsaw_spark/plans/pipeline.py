@@ -2,9 +2,10 @@
 
 The reference chains separate JVMs through delimited-protobuf files
 (go.bash:9-17: boundaries → extract → areaways → areas → graph → tags →
-tile). Here each stage is a DataFrame; `checkpoint_dir` (optional) persists
-each stage as parquet — the Iceberg-snapshot-style resume point mandated by
-the north rule (stage table = checkpoint; see plans/checkpoints.py).
+tile). Here each stage is a DataFrame, and `areas` is a localCheckpoint
+barrier (plans/snapshots.py). The resumable variant, which persists each
+stage as a fingerprinted parquet table, is
+plans/checkpoints.run_checkpointed.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ class PipelineResult:
     area_tags: DataFrame  # tags pruned to area-referenced osm ids (P7)
 
 
-def run_pipeline(documents: DataFrame, cache: bool = True,
+def run_pipeline(documents: DataFrame,
                  has_relations: bool | None = None) -> PipelineResult:
     nodes = D.decode_nodes(documents)
     ways = D.decode_ways(documents)
@@ -38,12 +39,11 @@ def run_pipeline(documents: DataFrame, cache: bool = True,
     tags = D.decode_tags(documents)
     areas = A.build_areas(nodes, ways, relations,
                           has_relations=has_relations)
-    if cache:
-        # areas feeds both sides of the containment join and the root
-        # anti-join — materialize once (Iceberg snapshot on a cluster;
-        # localCheckpoint barrier here, the measured round-5 A/B winner
-        # over a disk-parquet barrier — plans/snapshots.py).
-        areas = snapshot(areas, "areas")
+    # areas feeds both sides of the containment join and the root
+    # anti-join — materialize once (Iceberg snapshot on a cluster;
+    # localCheckpoint barrier here, the measured round-5 A/B winner
+    # over a disk-parquet barrier — plans/snapshots.py).
+    areas = snapshot(areas, "areas")
     edges = G.graph_edges(areas)
     atags = A.area_tags(tags, areas)
     return PipelineResult(nodes, ways, relations, tags, areas, edges, atags)

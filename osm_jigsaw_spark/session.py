@@ -19,18 +19,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    cores: local[] parallelism; defaults to $SPARK_GRAFT_CPUS or '*'.
+    cores: local[] parallelism; defaults to $SPARK_GRAFT_CPUS, else the
+    number of CPUs this process may run on (never more than it can use).
     shuffle_partitions: defaults to cores (local mode should not use 200).
     """
     if cores is None:
-        env = os.environ.get("SPARK_GRAFT_CPUS")
-        master = f"local[{env}]" if env else "local[*]"
-        n = int(env) if env else (os.cpu_count() or 8)
-    else:
-        master = f"local[{cores}]"
-        n = cores
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS")
+                    or len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
-        shuffle_partitions = max(4, n)
+        shuffle_partitions = max(4, cores)
 
     # One BLAS thread per Python worker: N workers each spawning
     # n_cpus OpenBLAS/OMP threads (the numpy default) oversubscribes the
@@ -42,7 +39,7 @@ def get_spark(
         os.environ.setdefault(var, "1")
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

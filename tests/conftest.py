@@ -21,8 +21,7 @@ def spark():
     # ~9.5 GB resident over the suite on a 4-CPU, 15 GB host; 4g keeps it
     # near 4 GB with the same run time
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
-    s = get_spark(app_name="osm-jigsaw-tests", cores=8, shuffle_partitions=8)
-    yield s
+    yield get_spark(app_name="osm-jigsaw-tests")
 
 
 def _executed_plan_nodes(df) -> list:
@@ -64,7 +63,6 @@ def docs(spark, world):
 @pytest.fixture(scope="session")
 def pipeline(spark, docs):
     r = run_pipeline(docs)
-    r.areas = r.areas.localCheckpoint()
     r.graph_edges = r.graph_edges.localCheckpoint()
     return r
 

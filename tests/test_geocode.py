@@ -2,12 +2,12 @@
 
 from pyspark.sql import functions as F
 
-from osm_jigsaw_spark.functions.cells import geohash_encode_np
+from osm_jigsaw_spark.functions.cells import geohash_encode_np, geohash_tiles
 from osm_jigsaw_spark.functions.geometry import points_in_ring
 from osm_jigsaw_spark.operators.containment import ROOT_ID
 from osm_jigsaw_spark.operators.geocode import geocode
 from osm_jigsaw_spark.operators.knn import knn_areas
-from osm_jigsaw_spark.operators.tiling import tile_assignments, tile_counts
+from osm_jigsaw_spark.operators.tiling import tile_assignments
 
 import numpy as np
 
@@ -36,9 +36,9 @@ def test_geocode_paths(pipeline, qpoints):
 
 
 def test_tile_grid_counts(spark):
-    assert tile_counts(spark, 1) == 32
-    assert tile_counts(spark, 2) == 1024
-    assert tile_counts(spark, 3) == 32768
+    assert geohash_tiles(spark, 1).count() == 32
+    assert geohash_tiles(spark, 2).count() == 1024
+    assert geohash_tiles(spark, 3).count() == 32768
 
 
 def test_geohash_encode_known_values():

@@ -207,6 +207,8 @@ def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
     text = "\n".join(t for _c, t in plan_nodes(cands))
     assert text.count("aggregate(") == 1
     assert text.count("md5(") == 1
+    # the word array is let-bound: one regex split per doc, not per shingle
+    assert text.count("split(") == 1
     assert "Join" not in text
     assert cands.count() == 10
 

@@ -88,9 +88,7 @@ def main() -> None:
     }
     for label, docs_plan in worlds.items():
         docs = snapshot(docs_plan, f"docs_{label}")
-        areas = snapshot(run_pipeline(docs, cache=False,
-                                      has_relations=False).areas,
-                         f"areas_{label}")
+        areas = run_pipeline(docs, has_relations=False).areas
 
         def f_contain() -> int:
             idx = snapshot(area_cell_index(areas), f"idx_{label}")
