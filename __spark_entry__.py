@@ -47,6 +47,7 @@ from osm_jigsaw_spark.operators.relations import expansion_status
 from osm_jigsaw_spark.operators.tiling import tile_assignments
 from osm_jigsaw_spark.plans.pipeline import run_pipeline
 from osm_jigsaw_spark.sources import documents as SD
+from osm_jigsaw_spark.streaming.events import windowed_event_counts
 
 # ---------------------------------------------------------------------------
 # fixture pipeline, built once per session
@@ -431,14 +432,7 @@ def q_topk_events(spark, sf_dir):
 
 
 def q_events_windowed(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    val = F.col("value").cast("decimal(18,6)")
-    return ev.groupBy(
-        F.date_trunc("hour", "ts").alias("window_start"), "event_type"
-    ).agg(
-        F.count("*").alias("n"),
-        F.round(F.sum(val), 4).cast("double").alias("total_value"),
-    )
+    return windowed_event_counts(_t(spark, sf_dir, "events"))
 
 
 def q_event_sessions(spark, sf_dir):

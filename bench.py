@@ -135,10 +135,7 @@ def main():
 
     for _ in range(ROUNDS):
         def f_pipeline():
-            # scaled_documents_df emits only way+node docs — skip the
-            # ~10-stage relation sub-plan via the caller hint (lazy, no
-            # isEmpty() probe job; ADVICE r1)
-            pipe = run_pipeline(docs, has_relations=False)
+            pipe = run_pipeline(docs)
             n = keep("areas", pipe.areas).count()
             return {"n_areas": n}
 

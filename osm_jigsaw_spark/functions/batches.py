@@ -1,4 +1,4 @@
-"""Arrow-batch helpers for sorted `mapInPandas` streams.
+"""Arrow-batch helpers for pandas UDFs and sorted `mapInPandas` streams.
 
 A `repartition(key).sortWithinPartitions(key, ...)` + `mapInPandas` pass
 processes thousands of per-key groups per Arrow batch — unlike
@@ -6,10 +6,14 @@ processes thousands of per-key groups per Arrow batch — unlike
 row count (`spark.sql.execution.arrow.maxRecordsPerBatch`), not by key, so
 one key's rows can straddle two batches; `whole_groups` re-chunks the
 stream so every chunk holds whole groups.
+
+`per_ring` dispatches the one-ring-vs-many geometry kernels
+(functions/geometry.py) inside a pandas UDF: one kernel call per ring.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 
@@ -28,3 +32,20 @@ def whole_groups(batches, key: str):
         yield pdf[~last]
     if carry is not None:
         yield carry
+
+
+def per_ring(kernel, dtype, key: pd.Series, lats: pd.Series,
+             lons: pd.Series, *rows: pd.Series) -> pd.Series:
+    """`kernel(ring_lats, ring_lons, *row_values)` once per distinct `key`
+    of a batch, over that key's rows of each `rows` column (its ring is read
+    from its first row); the results come back as a `dtype` Series in input
+    row order. Keys need not be sorted or contiguous."""
+    out = np.empty(len(key), dtype=dtype)
+    rows = [r.to_numpy() for r in rows]
+    positions = pd.Series(range(len(key))).groupby(key.to_numpy()).indices
+    for pos in positions.values():
+        first = pos[0]
+        out[pos] = kernel(np.asarray(lats.iloc[first]),
+                          np.asarray(lons.iloc[first]),
+                          *(r[pos] for r in rows))
+    return pd.Series(out)

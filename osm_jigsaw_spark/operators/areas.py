@@ -278,8 +278,8 @@ def dedup_areas(areas: DataFrame) -> DataFrame:
     )
 
 
-def build_areas(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
-                has_relations: bool | None = None) -> DataFrame:
+def build_areas(nodes: DataFrame, ways: DataFrame,
+                relations: DataFrame) -> DataFrame:
     """Full areas table from decoded entities (pre-graph).
 
     NOTE: duplicate (osm_id, ring_index) pairs cannot collide across ways and
@@ -287,15 +287,11 @@ def build_areas(nodes: DataFrame, ways: DataFrame, relations: DataFrame,
     per ring sharing the relation's osm_id (reference AreaResolver emits one
     ResolvedArea per outline ring).
 
-    has_relations: caller hint for skipping the relation sub-plan (the
-    relation walk, which materializes its levels when called, + sorted
-    stitching) on relation-free inputs. None (default) includes the branch;
-    pass False only when the input is known relation-free (e.g. the
-    synthetic bench corpus) — an eager isEmpty() probe of the input here
-    would launch a Spark job on every pipeline build (ADVICE r1)."""
-    outlines = way_outlines(ways)
-    if has_relations is not False:
-        outlines = outlines.unionByName(relation_outlines(relations, ways))
+    On relation-free input the relation walk is empty, and its empty plan
+    (plans.snapshots.frontier_loop) prunes the relation branch: no ways
+    scan, join or stitch runs for it."""
+    outlines = way_outlines(ways).unionByName(
+        relation_outlines(relations, ways))
     rings = resolve_outline_points(outlines, nodes)
     rings = rings.filter(F.col("n_points") >= 3)
     return dedup_areas(with_area_and_bbox(rings))

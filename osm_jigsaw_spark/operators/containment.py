@@ -33,13 +33,13 @@ where the reference "just barely" finishes single-threaded.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
+from ..functions.batches import per_ring
 from ..functions.geometry import (
     bbox_contains_expr,
     rect_ring_col,
@@ -74,23 +74,10 @@ def area_cell_index(areas: DataFrame) -> DataFrame:
 def _contains_udf(parent_key: pd.Series,
                   a_lats: pd.Series, a_lons: pd.Series,
                   b_lats: pd.Series, b_lons: pd.Series) -> pd.Series:
-    """Grouped-by-parent vectorized containment: candidate rows sharing a
-    parent ring (the common case after the cell join; call sites
-    sortWithinPartitions on the key to lengthen runs) are decided by ONE
-    ring_contains_rings_batch call — numpy cost per parent, not per pair."""
-    out = np.empty(len(parent_key), dtype=bool)
-    positions = pd.Series(range(len(parent_key))).groupby(
-        parent_key.to_numpy()).indices
-    for pos in positions.values():
-        first = pos[0]
-        ay = np.asarray(a_lats.iloc[first])
-        ax = np.asarray(a_lons.iloc[first])
-        out[pos] = ring_contains_rings_batch(
-            ay, ax,
-            [np.asarray(b_lats.iloc[i]) for i in pos],
-            [np.asarray(b_lons.iloc[i]) for i in pos],
-        )
-    return pd.Series(out)
+    """Parent ring contains each candidate child ring: one
+    ring_contains_rings_batch call per parent in a batch (batches.per_ring)."""
+    return per_ring(ring_contains_rings_batch, bool,
+                    parent_key, a_lats, a_lons, b_lats, b_lons)
 
 
 def contains_pairs(areas: DataFrame,

@@ -162,7 +162,7 @@ def minhash_signatures(documents: DataFrame,
             .select("doc_id", sigs.alias("sigs")))
 
 
-LSH_MAX_BUCKET = 1024  # per-(band,key) candidate cap — no O(n²) blowup
+LSH_MAX_BUCKET = 1024  # per-bucket cap of every LSH family — no O(n²) blowup
 
 
 def _minhash_bands(signatures: DataFrame) -> DataFrame:
@@ -231,6 +231,15 @@ def bucket_pairs(rows: DataFrame, bucket_cols: list[str], id_col: str,
     )
 
 
+def oversized_buckets(rows: DataFrame, bucket_cols: list[str],
+                      max_bucket: int) -> DataFrame:
+    """(*bucket_cols, bucket_n) for the buckets of more than max_bucket
+    rows, which bucket_pairs skips: the cap is disclosed, never silent."""
+    return (rows.groupBy(*bucket_cols)
+            .agg(F.count("*").alias("bucket_n"))
+            .filter(F.col("bucket_n") > max_bucket))
+
+
 def lsh_candidates(signatures: DataFrame,
                    max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(doc_a, doc_b) pairs sharing ≥1 LSH band.
@@ -247,10 +256,8 @@ def lsh_candidates(signatures: DataFrame,
 def lsh_oversized_buckets(signatures: DataFrame,
                           max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(band, key, bucket_n) buckets lsh_candidates skipped."""
-    return (_minhash_bands(signatures)
-            .groupBy("band", "key")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket))
+    return oversized_buckets(_minhash_bands(signatures), ["band", "key"],
+                             max_bucket)
 
 
 def jaccard_verify(h_arrays: DataFrame, pairs: DataFrame,
@@ -422,10 +429,9 @@ def simhash_oversized_buckets(documents: DataFrame,
                               max_bucket: int = LSH_MAX_BUCKET,
                               n_chunks: int = SIMHASH_CHUNKS) -> DataFrame:
     """(c, v, bucket_n) chunk buckets simhash_near_duplicates skipped."""
-    return (_simhash_chunks(simhash_signatures(documents), n_chunks)
-            .groupBy("c", "v")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket))
+    return oversized_buckets(
+        _simhash_chunks(simhash_signatures(documents), n_chunks),
+        ["c", "v"], max_bucket)
 
 
 def ngram_jaccard_pairs(documents: DataFrame, k: int = 5,

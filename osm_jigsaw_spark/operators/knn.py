@@ -15,12 +15,12 @@ areas, so radius 1-2 suffices).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.batches import per_ring
 from ..functions.cells import kring_cells
 from ..functions.geometry import points_ring_distance_batch
 from .containment import area_cell_index
@@ -29,21 +29,10 @@ from .containment import area_cell_index
 @F.pandas_udf(T.DoubleType())
 def _point_ring_distance(area_key: pd.Series, lat: pd.Series, lon: pd.Series,
                          lats: pd.Series, lons: pd.Series) -> pd.Series:
-    """Planar distance point→polygon boundary; 0 if inside-or-on.
-    Grouped by ring: all candidate points of one area in a batch are
-    decided by ONE points_ring_distance_batch sweep."""
-    out = np.empty(len(area_key), dtype=np.float64)
-    positions = pd.Series(range(len(area_key))).groupby(
-        area_key.to_numpy()).indices
-    py = lat.to_numpy(np.float64)
-    px = lon.to_numpy(np.float64)
-    for pos in positions.values():
-        first = pos[0]
-        out[pos] = points_ring_distance_batch(
-            py[pos], px[pos],
-            np.asarray(lats.iloc[first]), np.asarray(lons.iloc[first]),
-        )
-    return pd.Series(out)
+    """Planar distance point→polygon boundary; 0 if inside-or-on. One
+    points_ring_distance_batch call per area in a batch (batches.per_ring)."""
+    return per_ring(points_ring_distance_batch, float,
+                    area_key, lats, lons, lat, lon)
 
 
 def knn_areas(areas: DataFrame, points: DataFrame, k: int = 5,

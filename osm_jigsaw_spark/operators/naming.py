@@ -58,17 +58,6 @@ def name_from_tags(tags: dict[str, str] | None,
     return tags.get("name") or tags.get("addr:housename")
 
 
-def render_name(tags: dict[str, str] | None) -> str | None:
-    """Parser-side nameFor (model/EntityRendering.scala:15-23):
-    first of name:en, name, addr:housename."""
-    if not tags:
-        return None
-    for k in ("name:en", "name", "addr:housename"):
-        if tags.get(k):
-            return tags[k]
-    return None
-
-
 def has_excluded_tags(tags: dict[str, str] | None) -> bool:
     if not tags:
         return False

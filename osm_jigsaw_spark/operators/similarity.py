@@ -28,6 +28,7 @@ embarrassingly partition-parallel, and never shuffle the corpus.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
 
@@ -36,7 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import bucket_pairs
+from .dedup import LSH_MAX_BUCKET, bucket_pairs
+from .dedup import oversized_buckets as _oversized
 
 LSH_PLANES = 8  # signature bits
 
@@ -124,14 +126,18 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 20,
     return _rank_merge(partial, k)
 
 
+@functools.cache
 def _plane_matrix(planes: int, dim: int) -> np.ndarray:
     """(planes, dim) pseudo-random hyperplanes from the portable md5 hash:
-    component = int(md5("p:<p>:<d>")[:15 hex], 16) / 2^59 - 1 ∈ [-1, 1)."""
+    component = int(md5("p:<p>:<d>")[:15 hex], 16) / 2^59 - 1 ∈ [-1, 1).
+    Built once per process, driver or worker, with no job or broadcast;
+    read-only, as every caller shares it."""
     M = np.empty((planes, dim), dtype=np.float64)
     for p in range(planes):
         for d in range(dim):
             h = hashlib.md5(f"p:{p}:{d}".encode()).hexdigest()[:15]
             M[p, d] = int(h, 16) / float(2 ** 59) - 1.0
+    M.flags.writeable = False
     return M
 
 
@@ -148,19 +154,18 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5,
     restricted to corpus rows whose sign signature equals the query's."""
     spark = embeddings.sparkSession
     q_ids, Q = _collect_queries(embeddings, n_queries)
-    M = _plane_matrix(planes, Q.shape[1])
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    q_sigs = _signatures(Q, M)
-    bc = spark.sparkContext.broadcast((q_ids, Qn, q_sigs, M))
+    q_sigs = _signatures(Q, _plane_matrix(planes, Q.shape[1]))
+    bc = spark.sparkContext.broadcast((q_ids, Qn, q_sigs))
 
     def kernel(batches):
-        b_ids, b_Qn, b_sigs, b_M = bc.value
+        b_ids, b_Qn, b_sigs = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             C = np.array(list(pdf["embedding"]), dtype=np.float64)
             Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            c_sigs = _signatures(C, b_M)
+            c_sigs = _signatures(C, _plane_matrix(planes, C.shape[1]))
             vec_ids = pdf["vec_id"].to_numpy(np.int64)
             frames = []
             for qi in range(len(b_ids)):
@@ -187,19 +192,6 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5,
 
 EMB_BANDS = 8
 EMB_BAND_PLANES = 8
-EMB_MAX_BUCKET = 1024  # per-(band,sig) candidate cap — no O(n²) blowup
-
-_plane_cache: dict[tuple[int, int], np.ndarray] = {}
-
-
-def _plane_matrix_cached(planes: int, dim: int) -> np.ndarray:
-    """Worker-side memoized _plane_matrix — derived from md5 only, so it
-    needs no driver job and no broadcast; every executor rebuilds the
-    identical matrix once per process."""
-    key = (planes, dim)
-    if key not in _plane_cache:
-        _plane_cache[key] = _plane_matrix(planes, dim)
-    return _plane_cache[key]
 
 
 def band_signatures(embeddings: DataFrame, bands: int = EMB_BANDS,
@@ -219,7 +211,7 @@ def band_signatures(embeddings: DataFrame, bands: int = EMB_BANDS,
             if len(pdf) == 0:
                 continue
             C = np.array(list(pdf["embedding"]), dtype=np.float64)
-            M = _plane_matrix_cached(total, C.shape[1])
+            M = _plane_matrix(total, C.shape[1])
             bits = (C @ M.T) >= 0.0  # (n, total)
             sigs = bits.reshape(len(pdf), bands, planes_per_band) @ weights
             yield pd.DataFrame({
@@ -245,7 +237,7 @@ def embedding_near_duplicates(embeddings: DataFrame,
                               threshold: float = 0.45,
                               bands: int = EMB_BANDS,
                               planes_per_band: int = EMB_BAND_PLANES,
-                              max_bucket: int = EMB_MAX_BUCKET) -> DataFrame:
+                              max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(vec_a, vec_b, cos_sim) — banded-LSH cosine near-duplicates
     (vec_a < vec_b, cos_sim ≥ threshold among same-bucket candidates).
 
@@ -291,13 +283,11 @@ def embedding_near_duplicates(embeddings: DataFrame,
 
 def oversized_buckets(embeddings: DataFrame, bands: int = EMB_BANDS,
                       planes_per_band: int = EMB_BAND_PLANES,
-                      max_bucket: int = EMB_MAX_BUCKET) -> DataFrame:
+                      max_bucket: int = LSH_MAX_BUCKET) -> DataFrame:
     """(band, sig, bucket_n) for buckets embedding_near_duplicates skipped
     — the disclosure side of the hot-bucket cap."""
-    return (band_signatures(embeddings, bands, planes_per_band)
-            .groupBy("band", "sig")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(F.col("bucket_n") > max_bucket))
+    return _oversized(band_signatures(embeddings, bands, planes_per_band),
+                      ["band", "sig"], max_bucket)
 
 
 def embedding_near_duplicates_exact(embeddings: DataFrame,

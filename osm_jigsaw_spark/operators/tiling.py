@@ -17,13 +17,13 @@ DFS walk replaced by two joins.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cells as C
+from ..functions.batches import per_ring
 from ..functions.geometry import rect_ring_col, ring_intersects_rects_batch
 from .containment import ROOT_ID
 
@@ -33,22 +33,10 @@ def _intersects_rect_udf(area_key: pd.Series,
                          lats: pd.Series, lons: pd.Series,
                          min_lat: pd.Series, min_lon: pd.Series,
                          max_lat: pd.Series, max_lon: pd.Series) -> pd.Series:
-    """Grouped-by-ring vectorized polygon∩rect: all candidate tiles of one
-    area in a batch are decided by ONE ring_intersects_rects_batch call."""
-    out = np.empty(len(area_key), dtype=bool)
-    positions = pd.Series(range(len(area_key))).groupby(
-        area_key.to_numpy()).indices
-    mnla = min_lat.to_numpy(np.float64)
-    mnlo = min_lon.to_numpy(np.float64)
-    mxla = max_lat.to_numpy(np.float64)
-    mxlo = max_lon.to_numpy(np.float64)
-    for pos in positions.values():
-        first = pos[0]
-        out[pos] = ring_intersects_rects_batch(
-            np.asarray(lats.iloc[first]), np.asarray(lons.iloc[first]),
-            mnla[pos], mnlo[pos], mxla[pos], mxlo[pos],
-        )
-    return pd.Series(out)
+    """Polygon∩rect for each candidate tile: one ring_intersects_rects_batch
+    call per area in a batch (batches.per_ring)."""
+    return per_ring(ring_intersects_rects_batch, bool, area_key, lats, lons,
+                    min_lat, min_lon, max_lat, max_lon)
 
 
 def tile_assignments(spark: SparkSession, areas: DataFrame,

@@ -31,14 +31,12 @@ class PipelineResult:
     area_tags: DataFrame  # tags pruned to area-referenced osm ids (P7)
 
 
-def run_pipeline(documents: DataFrame,
-                 has_relations: bool | None = None) -> PipelineResult:
+def run_pipeline(documents: DataFrame) -> PipelineResult:
     nodes = D.decode_nodes(documents)
     ways = D.decode_ways(documents)
     relations = D.decode_relations(documents)
     tags = D.decode_tags(documents)
-    areas = A.build_areas(nodes, ways, relations,
-                          has_relations=has_relations)
+    areas = A.build_areas(nodes, ways, relations)
     # areas feeds both sides of the containment join and the root
     # anti-join — materialize once (Iceberg snapshot on a cluster;
     # localCheckpoint barrier here, the measured round-5 A/B winner

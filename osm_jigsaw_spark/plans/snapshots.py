@@ -48,19 +48,23 @@ def frontier_loop(seed: DataFrame, step: Callable[[DataFrame], DataFrame],
     snapshotted level that match `follow` (all rows when None). At most
     `max_depth` levels are built, and the walk stops at the first empty
     frontier. Every level is a snapshot, so the union reads materialized
-    rows."""
-    def counted(df: DataFrame) -> tuple[DataFrame, int]:
+    rows. An empty seed gives `limit(0)`: the optimizer makes it an empty
+    LocalRelation, so plans over the walk prune their scans and joins."""
+    def counted(df: DataFrame) -> tuple[DataFrame, dict]:
         seen = Observation()
         rows = F.count(F.lit(1) if follow is None else F.when(follow, 1))
-        snap = snapshot(df.observe(seen, rows.alias("n")))
-        return snap, seen.get["n"]
+        snap = snapshot(df.observe(seen, rows.alias("n"),
+                                   F.count(F.lit(1)).alias("rows")))
+        return snap, seen.get
 
-    level, n = counted(seed)
+    level, seen = counted(seed)
+    if seen["rows"] == 0:
+        return level.limit(0)
     walked = level
     for _ in range(max_depth - 1):
-        if n == 0:
+        if seen["n"] == 0:
             break
-        level, n = counted(
+        level, seen = counted(
             step(level if follow is None else level.filter(follow)))
         walked = walked.unionByName(level)
     return walked

@@ -4,7 +4,9 @@ kernels they replace (VERDICT r1 item 4)."""
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
+from osm_jigsaw_spark.functions.batches import per_ring
 from osm_jigsaw_spark.functions.geometry import (
     points_in_ring,
     points_ring_distance_batch,
@@ -58,7 +60,7 @@ def test_distance_batch_matches_scalar():
     ry, rx = _rand_ring(rng, 0, 0, 5.0, 16)
     py = rng.uniform(-10, 10, 300)
     px = rng.uniform(-10, 10, 300)
-    batch = points_ring_distance_batch(py, px, ry, rx)
+    batch = points_ring_distance_batch(ry, rx, py, px)
 
     def scalar_one(y, x):
         if points_in_ring(np.array([y]), np.array([x]), ry, rx)[0]:
@@ -94,3 +96,33 @@ def test_contains_batch_chunking():
     scalar = np.array([
         ring_contains_ring(ay, ax, by, bx) for by, bx in childs])
     assert (batch == scalar).all()
+
+
+def test_per_ring_dispatch_keeps_row_order():
+    """Rows of several rings, keys interleaved and unsorted as a pandas UDF
+    may see them: each row is decided by its own ring and the results come
+    back in input order."""
+    rng = np.random.default_rng(19)
+    rings = [_rand_ring(rng, cx, 0, 4.0, 12) for cx in (-6.0, 0.0, 6.0)]
+    key = rng.integers(0, 3, 90)
+    assert (np.diff(key) < 0).any()
+    lats = pd.Series([rings[k][0] for k in key])
+    lons = pd.Series([rings[k][1] for k in key])
+    py = rng.uniform(-6, 6, 90)
+    px = rng.uniform(-12, 12, 90)
+    dist = per_ring(points_ring_distance_batch, float, pd.Series(key),
+                    lats, lons, pd.Series(py), pd.Series(px))
+    want = [points_ring_distance_batch(*rings[k], py[i:i + 1], px[i:i + 1])[0]
+            for i, k in enumerate(key)]
+    np.testing.assert_allclose(dist, want, rtol=0, atol=1e-12)
+    assert (dist == 0).any() and (dist > 0).any()
+
+    childs = [_rand_ring(rng, *rng.uniform(-8, 8, 2), 1.5, 8)
+              for _ in key]
+    got = per_ring(ring_contains_rings_batch, bool, pd.Series(key),
+                   lats, lons, pd.Series([c[0] for c in childs]),
+                   pd.Series([c[1] for c in childs]))
+    scalar = [ring_contains_ring(*rings[k], *childs[i])
+              for i, k in enumerate(key)]
+    assert got.tolist() == scalar
+    assert any(scalar) and not all(scalar)

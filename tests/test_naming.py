@@ -1,13 +1,15 @@
 """All seven golden cases from NaiveNamingServiceSpec.scala:15-232, plus
 EntityNameTags selection (EntityNameTagsSpec.scala:7-53) and batch naming."""
 
+from pyspark.sql import functions as F
+
 from osm_jigsaw_spark.operators.geocode import geocode
 from osm_jigsaw_spark.operators.naming import (
     name_for_paths,
     name_from_tags,
     name_points,
-    render_name,
 )
+from osm_jigsaw_spark.sources.json_sink import _name_expr
 
 
 def one(ids_areas, tags):
@@ -105,8 +107,17 @@ def test_name_from_tags_selection():
     assert name_from_tags({"name": "X", "name:cy": "Y"}, None) == "X"
     assert name_from_tags({"addr:housename": "H"}, None) == "H"
     assert name_from_tags({}, None) is None
-    assert render_name({"name:en": "E", "name": "N"}) == "E"
-    assert render_name({"name": "N"}) == "N"
+
+
+def test_json_sink_name_chain(spark):
+    # parser-side nameFor (EntityRendering.scala:15-23) as json_sink ships
+    # it: first of name:en, name, addr:housename
+    df = spark.createDataFrame(
+        [(1, {"name:en": "E", "name": "N"}), (2, {"name": "N"})],
+        "id int, tags map<string,string>")
+    got = dict(df.select("id", _name_expr(F.col("tags"), F.lit("id")))
+               .collect())
+    assert got == {1: "E", 2: "N"}
 
 
 def test_batch_naming(pipeline, qpoints):

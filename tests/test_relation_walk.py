@@ -327,3 +327,16 @@ def test_frontier_loop_runs_one_job_per_level(spark):
     assert got == sorted([(i, 1) for i in range(10)]
                          + [(i, d) for i in range(0, 10, 2) for d in (2, 3, 4)])
     assert jobs == 5, jobs
+
+
+def test_frontier_loop_empty_seed_is_local_relation(spark):
+    """An empty walk is an empty LocalRelation at plan time, so a plan over
+    it (the relation branch of areas.build_areas on a relation-free corpus)
+    prunes its joins and scans instead of running them over zero rows."""
+    seed = spark.range(10).filter("id < 0").select(
+        "id", F.lit(1).alias("depth"))
+    walked = frontier_loop(seed, lambda frontier: frontier, 12)
+    plan = walked._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert plan.data().isEmpty()
+    assert walked.schema == seed.schema

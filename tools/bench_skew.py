@@ -19,7 +19,9 @@ each pipeline plus the disclosure counts; the claim for BENCH_APPENDIX.md
 is throughput within ~1.5x of the uniform world and a NON-EMPTY
 lsh_oversized_buckets disclosure (no silent truncation).
 
-Usage: python tools/bench_skew.py [cpus] [n_areas] [n_docs] [reps]
+Usage: python tools/bench_skew.py [n_areas] [n_docs] [reps]
+(parallelism as session.get_spark sizes it; `cpus` in the output is the
+resulting default parallelism)
 """
 
 from __future__ import annotations
@@ -58,15 +60,13 @@ from osm_jigsaw_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    cpus = int(sys.argv[1]) if len(sys.argv) > 1 else 16
-    n_areas = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
-    n_docs = int(sys.argv[3]) if len(sys.argv) > 3 else 200_000
-    reps = int(sys.argv[4]) if len(sys.argv) > 4 else 2
-    spark = get_spark(app_name="skew-stress", cores=cpus,
-                      shuffle_partitions=cpus)
+    n_areas = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
+    n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 200_000
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    spark = get_spark(app_name="skew-stress")
 
-    out: dict[str, object] = {"cpus": cpus, "n_areas": n_areas,
-                              "n_docs": n_docs}
+    out: dict[str, object] = {"cpus": spark.sparkContext.defaultParallelism,
+                              "n_areas": n_areas, "n_docs": n_docs}
 
     def timed(name: str, fn) -> None:
         best = None
@@ -88,7 +88,7 @@ def main() -> None:
     }
     for label, docs_plan in worlds.items():
         docs = snapshot(docs_plan, f"docs_{label}")
-        areas = run_pipeline(docs, has_relations=False).areas
+        areas = run_pipeline(docs).areas
 
         def f_contain() -> int:
             idx = snapshot(area_cell_index(areas), f"idx_{label}")
