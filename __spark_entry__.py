@@ -37,7 +37,6 @@ from osm_jigsaw_spark.operators import dedup as DD
 from osm_jigsaw_spark.operators import multimodal as MM
 from osm_jigsaw_spark.operators import similarity as SIM
 from osm_jigsaw_spark.operators import textops as TX
-from osm_jigsaw_spark.operators.containment import graph_edges
 from osm_jigsaw_spark.operators.geocode import geocode
 from osm_jigsaw_spark.operators.knn import knn_areas
 from osm_jigsaw_spark.operators.naming import name_points

@@ -5,16 +5,21 @@ only dedup is the geometric area dedup, steps/RenderAndDeduplicateAreas.scala).
 All four are shuffle-conscious:
 
 - exact: one groupBy on md5(text) (map-side partial agg; 32-byte keys);
-- MinHash+LSH: K portable min-hashes per row (one `aggregate` over the
-  doc's shingle-hash array) → banding → candidate pairs listed inside each
-  capped band bucket (bucket_pairs: one exchange, no self-join) → exact
-  Jaccard by `array_intersect` of the pair's two arrays. Never an
-  all-pairs product.
-- SimHash: per-row 48-bit sign-sum via one `aggregate` over the token-hash
-  array (no explode, no crossJoin), near-dup candidates listed inside
-  12-bit chunk buckets (bucket_pairs), Hamming verify via bit_count(xor).
+- MinHash+LSH: K portable min-hashes per doc (the shingle hashes
+  exploded, then K codegen'd `min` columns in one aggregate grouped by
+  doc_id) → banding → candidate pairs listed inside each capped band
+  bucket (bucket_pairs: one exchange, no self-join) → exact Jaccard by
+  `array_intersect` of the pair's two arrays. Never an all-pairs product.
+- SimHash: per-doc 48-bit sign-sum, the token hashes exploded and summed
+  per bit in one aggregate grouped by doc_id (no crossJoin), near-dup
+  candidates listed inside 12-bit chunk buckets (bucket_pairs), Hamming
+  verify via bit_count(xor).
 - n-gram Jaccard: shingle equi-join with per-pair counts; intended for
   bounded subsets / post-LSH verification at scale.
+
+Both signature aggregates are partially aggregated map-side, so at most
+one row per doc (its K or 48 longs) crosses an exchange, and none does
+when the input is already partitioned on doc_id.
 
 Everything is built-in columnar expressions on portable arithmetic
 (functions shared with the DuckDB oracles — see textops.hash60).
@@ -125,41 +130,34 @@ def minhash_signatures(documents: DataFrame,
                        h_arrays: DataFrame | None = None) -> DataFrame:
     """(doc_id, sigs array<long> of length MINHASH_K).
 
-    MinHash is a PER-ROW computation: each doc's K permutation minima come
-    from ONE aggregate pass over its own shingle-hash array — zero
-    shuffle, zero explode (the naive explode→groupBy formulation
-    exchanges the corpus-sized shingle multiset to compute row-local
-    minima). The accumulator is the K-vector of running minima and the
-    (a,b) permutation params are a constant-folded literal array, so the
-    md5 chain is evaluated exactly once per shingle no matter K — K
-    separate array_min(transform(hs,...)) expressions would let Catalyst's
-    CollapseProject inline (= recompute) the hash array K times.
-    a*h < P^2 < 2^62 stays in int64.
+    Each doc's K permutation minima are K `min` aggregates over its
+    exploded shingle hashes, grouped by doc_id: every minimum is a plain
+    arithmetic column, so whole-stage codegen runs the fold (README "Scale
+    design": a per-row fold that yields K scalars is an explode plus a
+    per-key aggregate, because higher-order functions are interpreted).
+    Map-side partial aggregation leaves at most one partial row per doc
+    (K longs) before any exchange. There is none when the input is already
+    partitioned on doc_id (near_dup's snapshotted `spark.range` corpus:
+    Generate → partial HashAggregate → HashAggregate); otherwise one
+    exchange carries docs × K longs, never the shingle multiset. A doc
+    without shingles has no hash left after the null filter, so it is
+    absent from the output. a*h < P^2 < 2^62 stays in int64.
 
     The input is the hashed shingle arrays: pass h_arrays (an already
     materialized hashed_shingle_arrays table) and the md5 chain is absent
-    from this plan entirely; without it they are derived from documents.
-    The permutation folds over `h % P` per element."""
-    params = F.array(*[
-        F.struct(F.lit(a).cast("long").alias("a"),
-                 F.lit(b).cast("long").alias("b"))
-        for _j, a, b in minhash_params()
-    ])
-    init = F.array(*[F.lit(P).cast("long")] * MINHASH_K)
+    from this plan entirely; without it they are derived from documents
+    and the chain runs once per shingle, under the explode."""
     if h_arrays is None:
         h_arrays = hashed_shingle_arrays(documents)
-    hs = F.transform("hshingles", lambda h: h % P)
-    sigs = F.aggregate(
-        hs, init,
-        lambda acc, h: F.zip_with(
-            acc, params, lambda m, p: F.least(m, (p["a"] * h + p["b"]) % P)),
-    )
-    # exploding the filtered one-element array drops the empty docs, so no
-    # size() predicate pushed below the projection re-inlines the md5 chain
-    nonempty = F.explode(F.filter(F.array("hshingles"),
-                                  lambda h: F.size(h) > 0))
-    return (h_arrays.select("doc_id", nonempty.alias("hshingles"))
-            .select("doc_id", sigs.alias("sigs")))
+    h = F.col("h") % P
+    # explode_outer: Catalyst infers `size(hshingles) > 0` from a plain
+    # explode of a column and pushes it below the projection, where it
+    # re-inlines the md5 chain; a doc without shingles gives one null h
+    return (h_arrays.select("doc_id", F.explode_outer("hshingles").alias("h"))
+            .filter(F.col("h").isNotNull())
+            .groupBy("doc_id")
+            .agg(F.array(*[F.min((F.lit(a).cast("long") * h + b) % P)
+                           for _j, a, b in minhash_params()]).alias("sigs")))
 
 
 LSH_MAX_BUCKET = 1024  # per-bucket cap of every LSH family — no O(n²) blowup
@@ -332,35 +330,27 @@ def minhash_near_duplicates(documents: DataFrame,
 def simhash_signatures(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) — 48-bit sign-sum signature over token hashes.
 
-    PER-ROW computation, same shape as minhash_signatures: one `aggregate`
-    over the row's token-hash array accumulates all 48 per-bit sign-sums
-    at once — zero shuffle, zero explode, zero crossJoin. (The former
-    formulation exploded tokens and crossJoined a broadcast 48-row bit
-    dimension: the exchange was bounded by map-side combine, but every
-    in-flight token row was inflated 48× — pure wasted CPU at 100 TB;
-    VERDICT r3 What's-wrong #3.) The md5 chain runs ONCE per token (the
-    aggregate lambda receives the already-hashed element); the inner
-    zip_with only ANDs h against 48 literal masks. Token multiplicity
-    counts (no array_distinct), and zero-token docs are absent from the
-    output — both matching the old explode semantics and the DuckDB
-    oracle (oracles.sql_simhash). Ties (sum == 0) → bit 0, as before."""
-    masks = F.array(*[F.lit(1 << i).cast("long") for i in range(SIMHASH_BITS)])
-    init = F.array(*[F.lit(0).cast("long")] * SIMHASH_BITS)
-    hs = F.transform("words", lambda w: hash60(w))
-    sums = F.aggregate(
-        hs, init,
-        lambda acc, h: F.zip_with(
-            acc, masks,
-            lambda s, m: s + F.when(h.bitwiseAND(m) != 0,
-                                    F.lit(1)).otherwise(F.lit(-1))))
-    simhash = F.aggregate(
-        F.zip_with(sums, masks,
-                   lambda s, m: F.when(s > 0, m).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x)
-    w = documents.select("doc_id", words_col(F.col("text")).alias("words"))
-    return (w.filter(F.size("words") > 0)
-            .select("doc_id", simhash.alias("simhash")))
+    Same shape as minhash_signatures: the tokens are exploded and hashed
+    once each (hash60), then one aggregate grouped by doc_id sums the 48
+    per-bit signs as plain codegen'd columns, and the bits are assembled
+    from the sums in the same aggregate's result. Map-side partial
+    aggregation leaves at most one partial row per doc (48 longs) before
+    any exchange; one appears when the documents are not partitioned on
+    doc_id. Token multiplicity counts (no array_distinct), zero-token
+    docs are absent from the output (the explode drops them) and a tie
+    (sum == 0) gives bit 0, matching the DuckDB oracle
+    (oracles.sql_simhash)."""
+    h = F.col("h")
+    bits = [
+        F.when(F.sum(F.when(h.bitwiseAND(1 << i) != 0, 1).otherwise(-1)) > 0,
+               F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
+        for i in range(SIMHASH_BITS)
+    ]
+    return (documents
+            .select("doc_id", F.explode(words_col(F.col("text"))).alias("w"))
+            .select("doc_id", hash60(F.col("w")).alias("h"))
+            .groupBy("doc_id")
+            .agg(sum(bits[1:], bits[0]).alias("simhash")))
 
 
 def _simhash_chunks(sigs: DataFrame,

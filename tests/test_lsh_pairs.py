@@ -11,7 +11,8 @@ array-intersect Jaccard verify.
   empty intersection, identical arrays and a pair exactly at the
   threshold;
 - plan guards: the signature subtree runs once under `lsh_candidates`,
-  with no join, and `embedding_near_duplicates` holds one `MapInPandas`.
+  with no join; neither signature plan holds an interpreted fold; and
+  `embedding_near_duplicates` holds one `MapInPandas`.
 """
 
 from __future__ import annotations
@@ -191,26 +192,53 @@ def test_jaccard_verify_matches_set_jaccard(spark, plan_nodes, threshold):
     assert text.count("array_intersect(") == 1
 
 
-def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
+def _fold_free_plan(plan_nodes, df: DataFrame) -> str:
+    """The executed plan's text, after asserting that it holds no
+    interpreted fold (`aggregate(`, `zip_with(`) and exactly one final
+    aggregate keyed on doc_id: the signatures, computed once. The input is
+    partitioned on doc_id, so that aggregate adds no exchange."""
+    nodes = plan_nodes(df)
+    text = "\n".join(t for _c, t in nodes)
+    assert text.count("aggregate(") == 0
+    assert text.count("zip_with(") == 0
+    assert "hashpartitioning(doc_id#" not in text
+    final = [t for c, t in nodes if c == "HashAggregateExec"
+             and "Keys [1]: [doc_id#" in t and "partial_" not in t]
+    assert len(final) == 1
+    return text
+
+
+def _hex_docs(spark) -> DataFrame:
     """Docs of 30 hex tokens, doc 10k+1 a copy of doc 10k with one token
-    replaced, snapshotted as minhash_near_duplicates snapshots its input:
-    here the band self-join ran the signature `aggregate` in both of its
-    branches (no ReusedExchange), and a `size(hshingles) > 0` filter pushed
-    below the projection re-inlined the md5 shingle-hash chain."""
+    replaced, snapshotted as minhash_near_duplicates snapshots its input."""
     src = ("IF(id % 10 = 1 AND j = id % 30, concat('x:', CAST(id AS STRING)),"
            " CAST(IF(id % 10 = 1, id - 1, id) AS STRING))")
     docs = snapshot(spark.range(100).selectExpr(
         "id AS doc_id",
         "concat_ws(' ', transform(sequence(0, 29), j -> substring(md5("
         f"concat({src}, ':', CAST(j AS STRING))), 1, 8))) AS text"))
+    return docs
+
+
+def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
+    """The band self-join ran the signatures in both of its branches (no
+    ReusedExchange), the per-row `aggregate`/`zip_with` fold was
+    interpreted, and a `size(hshingles) > 0` filter pushed below the
+    projection re-inlined the md5 shingle-hash chain."""
+    docs = _hex_docs(spark)
     cands = D.lsh_candidates(D.minhash_signatures(docs))
-    text = "\n".join(t for _c, t in plan_nodes(cands))
-    assert text.count("aggregate(") == 1
+    text = _fold_free_plan(plan_nodes, cands)
     assert text.count("md5(") == 1
     # the word array is let-bound: one regex split per doc, not per shingle
     assert text.count("split(") == 1
     assert "Join" not in text
     assert cands.count() == 10
+
+
+def test_simhash_signatures_plan_has_no_fold(spark, plan_nodes):
+    text = _fold_free_plan(plan_nodes,
+                           D.simhash_signatures(_hex_docs(spark)))
+    assert text.count("md5(") == 1
 
 
 def test_embedding_near_duplicates_plan_has_one_map_in_pandas(spark,
