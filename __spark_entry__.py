@@ -131,7 +131,6 @@ def q_tile_assignments(spark, sf_dir):
 
 
 def q_tile_grid(spark, sf_dir):
-    import pandas as pd
     counts = [(r, C.geohash_tiles(spark, r).count()) for r in (1, 2, 3)]
     return spark.createDataFrame(
         pd.DataFrame(counts, columns=["res", "n_tiles"]),
@@ -291,7 +290,7 @@ def q_topo_depths(spark, sf_dir):
 
 
 def q_tile_graph(spark, sf_dir):
-    from osm_jigsaw_spark.operators.tiling import tile_assignments, tile_graph
+    from osm_jigsaw_spark.operators.tiling import tile_graph
     fx = _fx(spark)
     assign = tile_assignments(spark, fx["pipe"].areas, res=1)
     tg = tile_graph(fx["pipe"].graph_edges, assign)
@@ -490,7 +489,8 @@ def q_cosine_topk(spark, sf_dir):
 
 
 def q_ann_lsh_topk(spark, sf_dir):
-    # approximate variant — rows-only check (no SQL-expressible oracle)
+    # approximate variant; oracles.sql_ann_lsh_topk mirrors the md5
+    # hyperplanes and the signature-bucket match
     return SIM.lsh_topk(_t(spark, sf_dir, "embeddings"), n_queries=20, k=5)
 
 

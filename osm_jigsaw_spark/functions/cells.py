@@ -7,9 +7,11 @@ is bit-aligned with geohash, so tile counts/ids match the reference
 (32 / 1,024 / 32,768 at res 1/2/3 — tiles/TileGeneratorSpec.scala:11-13).
 
 Everything the hot joins need (cell of a point, adaptive covering of a bbox,
-k-ring of a point) is pure `pyspark.sql.functions` arithmetic — whole-stage
-codegen, no Python in the path. Geohash *strings* exist only in the small
-tile dimension table, generated once in numpy.
+k-ring of a point) is pure `pyspark.sql.functions` arithmetic — no Python in
+the path. The cell of a point is whole-stage codegen; coverings and k-rings
+build their arrays with `F.transform`, whose lambdas are interpreted (README
+"Scale design"). Geohash *strings* exist only in the small tile dimension
+table, generated once in numpy.
 
 At resolution r (geohash-aligned): lon_bits = ceil(5r/2), lat_bits =
 floor(5r/2); a cell key packs (res, lon_idx, lat_idx) into one int64 so a

@@ -80,9 +80,11 @@ def pip_col(py: Column, px: Column, lats: Column, lons: Column,
             boundary: bool = True, eps: float = 1e-12) -> Column:
     """Boundary-inclusive point-in-polygon as a PURE COLUMN EXPRESSION.
 
-    Crossing-number over the zipped edge list (zip_with + aggregate —
-    whole-stage codegen, no Python). Same semantics as points_in_ring;
-    used in the geocode hot path where per-row Arrow overhead dominates.
+    Crossing-number over the zipped edge list (arrays_zip + aggregate —
+    no Python, but the aggregate lambda is interpreted: higher-order
+    functions fall back from whole-stage codegen). Same semantics as
+    points_in_ring; used in the geocode hot path where per-row Arrow
+    overhead dominates.
     """
     edges = F.arrays_zip(
         lats.alias("y1"), lons.alias("x1"),

@@ -94,9 +94,14 @@ def shingle_arrays(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
 
 
 def shingles(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """(doc_id, shingle) — exploded per-doc-distinct k-word shingles."""
-    return shingle_arrays(documents, k).select(
-        "doc_id", F.explode("shingles").alias("shingle"))
+    """(doc_id, shingle) — exploded per-doc-distinct k-word shingles.
+
+    explode_outer + a null filter, as in minhash_signatures: a plain
+    explode lets Catalyst push `size(shingles) > 0` below the projection,
+    where it re-runs the split/shingle chain."""
+    return (shingle_arrays(documents, k)
+            .select("doc_id", F.explode_outer("shingles").alias("shingle"))
+            .filter(F.col("shingle").isNotNull()))
 
 
 def hashed_shingle_arrays(documents: DataFrame,

@@ -54,7 +54,7 @@ def areas_containing_points(areas: DataFrame, points: DataFrame,
         & (F.col("lon") >= F.col("bbox.min_lon"))
         & (F.col("lon") <= F.col("bbox.max_lon"))
     )
-    # columnar crossing-number PIP — whole-stage codegen, no Arrow hop;
+    # columnar crossing-number PIP — an interpreted aggregate, no Arrow hop;
     # axis-rect rings (index is_rect) are already decided by the bbox
     # filter above, so the edge-walk only runs for true polygons
     hit = cand.withColumn(

@@ -2,27 +2,30 @@
 
 Training-data-pipeline extension (no reference analog):
 
-- brute_force_topk: exact cosine top-k. The query side is small by
-  definition (a bounded query set), so it is collected, L2-normalized in
-  numpy, and broadcast; the corpus side streams through a vectorized
-  mapInPandas kernel that computes one matmul per Arrow batch and emits
-  only the per-batch top-k per query. A final (tiny) window merge yields
-  the exact global top-k — per-batch pruning is lossless because both
-  levels use the same total order (cos_sim desc, vec_id asc). At 100 TB
-  the shuffle after the kernel carries ≤ k·n_queries rows per partition,
-  never the corpus.
-- lsh_topk: random-hyperplane LSH — hyperplane components derived from
-  md5("p:<plane>:<dim>") (deterministic across engines AND runs, no RNG);
-  sign signature → bucket match against the broadcast query signatures →
-  exact cosine only within matching buckets. Candidates shrink
-  ~2^planes-fold; recall tunable by planes.
+- brute_force_topk, lsh_topk, ivf_topk: exact cosine top-k, filter then
+  refine. All three run one kernel, _exact_topk: the query side is small
+  by definition (a bounded query set), so it is collected, L2-normalized
+  in numpy, and broadcast with the operator's candidate state; the corpus
+  streams through one vectorized mapInPandas pass that computes one
+  matmul per Arrow batch, masks it with the operator's candidate rule and
+  emits only the per-batch top-k per query. A final (tiny) window merge
+  yields the exact global top-k — per-batch pruning is lossless because
+  both levels use the same total order (cos_sim desc, vec_id asc). At
+  100 TB the shuffle after the kernel carries ≤ k·n_queries rows per
+  partition, never the corpus. The operators differ only in the mask:
+  none for brute force; same random-hyperplane sign signature as the
+  query for lsh_topk (hyperplane components derived from
+  md5("p:<plane>:<dim>") — deterministic across engines AND runs, no RNG;
+  candidates shrink ~2^planes-fold, recall tunable by planes); nearest
+  centroid among the query's probed cells for ivf_topk.
 - embedding_near_duplicates: banded sign-signature LSH (b bands × r
   planes) → pairs listed inside each capped (band, sig) bucket
-  (dedup.bucket_pairs, no self-join) → pure-codegen columnar cosine
-  verify. No driver collect, no corpus broadcast, no all-pairs;
-  embedding_near_duplicates_exact is the guarded small-scale baseline.
+  (dedup.bucket_pairs, no self-join) → columnar cosine verify (an
+  interpreted zip_with/aggregate expression). No driver collect, no
+  corpus broadcast, no all-pairs; embedding_near_duplicates_exact is the
+  guarded small-scale baseline.
 
-All kernels are Arrow-batched numpy (no per-row Python), stay
+The kernels are Arrow-batched numpy (no per-row Python), stay
 embarrassingly partition-parallel, and never shuffle the corpus.
 """
 
@@ -42,59 +45,68 @@ from .dedup import oversized_buckets as _oversized
 
 LSH_PLANES = 8  # signature bits
 
-_OUT_SCHEMA = "query_id long, vec_id long, cos_sim double"
+
+def _rows(pdf: pd.DataFrame) -> np.ndarray:
+    """float64 (n, dim) matrix of an Arrow batch's embedding column."""
+    return np.array(list(pdf["embedding"]), dtype=np.float64)
 
 
-def _collect_queries(embeddings: DataFrame, n_queries: int):
-    """(q_ids int64[nq], Q float64[nq, d]) — the bounded query set."""
-    rows = (
-        embeddings.filter(F.col("vec_id") < n_queries)
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    rows.sort(key=lambda r: r.vec_id)
-    q_ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in rows], dtype=np.float64)
-    return q_ids, Q
+def _unit(V: np.ndarray) -> np.ndarray:
+    """Rows of V scaled to unit L2 norm."""
+    return V / np.linalg.norm(V, axis=1, keepdims=True)
 
 
-def _batch_topk(sims: np.ndarray, vec_ids: np.ndarray, q_ids: np.ndarray,
-                k: int):
-    """Per-query top-k rows of a (n_rows, n_q) rounded sims matrix under
-    the total order (cos_sim desc, vec_id asc). Returns a pandas frame."""
-    out_q, out_v, out_s = [], [], []
-    n = sims.shape[0]
-    kk = min(k, n)
-    for qi in range(sims.shape[1]):
-        col = sims[:, qi]
-        mask = vec_ids != q_ids[qi]
-        idx = np.nonzero(mask)[0]
-        if idx.size == 0:
-            continue
-        sub = col[idx]
-        take = min(kk, idx.size)
-        # lexsort: primary -sub desc, tie-break vec_id asc
-        order = np.lexsort((vec_ids[idx], -sub))[:take]
-        sel = idx[order]
-        out_q.append(np.full(take, q_ids[qi], dtype=np.int64))
-        out_v.append(vec_ids[sel])
-        out_s.append(col[sel])
-    if not out_q:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "vec_id": pd.Series([], dtype="int64"),
-                             "cos_sim": pd.Series([], dtype="float64")})
-    return pd.DataFrame({
-        "query_id": np.concatenate(out_q),
-        "vec_id": np.concatenate(out_v),
-        "cos_sim": np.concatenate(out_s),
-    })
+def _collect(embeddings: DataFrame):
+    """(ids int64[n], V float64[n, dim]) in vec_id order — for bounded
+    frames only (the query set, the quantizer, the exact baseline)."""
+    rows = sorted(embeddings.select("vec_id", "embedding").collect(),
+                  key=lambda r: r.vec_id)
+    return (np.array([r.vec_id for r in rows], dtype=np.int64),
+            np.array([r.embedding for r in rows], dtype=np.float64))
 
 
-def _rank_merge(partial: DataFrame, k: int) -> DataFrame:
+def _exact_topk(embeddings: DataFrame, q_ids: np.ndarray, Q: np.ndarray,
+                k: int, candidates=None, state=None) -> DataFrame:
+    """(query_id, vec_id, cos_sim, rank) — per query, the k corpus rows of
+    highest round(cosine, 6) under (cos_sim desc, vec_id asc), the query
+    itself excluded, among the rows `candidates` admits.
+
+    candidates(C, state) maps a batch's raw (n, dim) float64 matrix to an
+    (n, n_queries) bool mask; `state` is broadcast once with the unit
+    queries, so it is not pickled into every task's closure."""
+    bc = embeddings.sparkSession.sparkContext.broadcast(
+        (q_ids, _unit(Q), state))
+
+    def kernel(batches):
+        b_ids, b_Qn, b_state = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            C = _rows(pdf)
+            vec_ids = pdf["vec_id"].to_numpy(np.int64)
+            sims = np.round(_unit(C) @ b_Qn.T, 6)
+            ok = vec_ids[:, None] != b_ids[None, :]
+            if candidates is not None:
+                ok &= candidates(C, b_state)
+            sel = []
+            for qi in range(len(b_ids)):
+                idx = np.nonzero(ok[:, qi])[0]
+                # lexsort: primary -cos_sim (desc), tie-break vec_id asc
+                sel.append(idx[np.lexsort((vec_ids[idx], -sims[idx, qi]))[:k]])
+            if not any(s.size for s in sel):
+                continue
+            rows = np.concatenate(sel)
+            cols = np.repeat(np.arange(len(b_ids)), [s.size for s in sel])
+            yield pd.DataFrame({"query_id": b_ids[cols],
+                                "vec_id": vec_ids[rows],
+                                "cos_sim": sims[rows, cols]})
+
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id"))
     return (
-        partial.withColumn("rank", F.row_number().over(w))
+        embeddings.select("vec_id", "embedding")
+        .mapInPandas(kernel, "query_id long, vec_id long, cos_sim double")
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "vec_id", "cos_sim",
                 F.col("rank").cast("long").alias("rank"))
@@ -105,25 +117,8 @@ def brute_force_topk(embeddings: DataFrame, n_queries: int = 20,
                      k: int = 5) -> DataFrame:
     """(query_id, vec_id, cos_sim, rank) — exact cosine top-k for the first
     n_queries vec_ids against the whole corpus."""
-    spark = embeddings.sparkSession
-    q_ids, Q = _collect_queries(embeddings, n_queries)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((q_ids, Qn))
-
-    def kernel(batches):
-        b_ids, b_Qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            sims = np.round(Cn @ b_Qn.T, 6)
-            yield _batch_topk(sims, pdf["vec_id"].to_numpy(np.int64),
-                              b_ids, k)
-
-    partial = embeddings.select("vec_id", "embedding").mapInPandas(
-        kernel, _OUT_SCHEMA)
-    return _rank_merge(partial, k)
+    q_ids, Q = _collect(embeddings.filter(F.col("vec_id") < n_queries))
+    return _exact_topk(embeddings, q_ids, Q, k)
 
 
 @functools.cache
@@ -141,10 +136,10 @@ def _plane_matrix(planes: int, dim: int) -> np.ndarray:
     return M
 
 
-def _signatures(V: np.ndarray, M: np.ndarray) -> np.ndarray:
+def _signatures(V: np.ndarray, planes: int) -> np.ndarray:
     """int64 bucket id per row: bit p set iff V·plane_p >= 0."""
-    bits = (V @ M.T) >= 0.0
-    weights = (1 << np.arange(M.shape[0], dtype=np.int64))
+    bits = (V @ _plane_matrix(planes, V.shape[1]).T) >= 0.0
+    weights = (1 << np.arange(planes, dtype=np.int64))
     return bits.astype(np.int64) @ weights
 
 
@@ -152,42 +147,13 @@ def lsh_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5,
              planes: int = LSH_PLANES) -> DataFrame:
     """(query_id, vec_id, cos_sim, rank) — approximate top-k: candidates
     restricted to corpus rows whose sign signature equals the query's."""
-    spark = embeddings.sparkSession
-    q_ids, Q = _collect_queries(embeddings, n_queries)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    q_sigs = _signatures(Q, _plane_matrix(planes, Q.shape[1]))
-    bc = spark.sparkContext.broadcast((q_ids, Qn, q_sigs))
+    q_ids, Q = _collect(embeddings.filter(F.col("vec_id") < n_queries))
 
-    def kernel(batches):
-        b_ids, b_Qn, b_sigs = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            c_sigs = _signatures(C, _plane_matrix(planes, C.shape[1]))
-            vec_ids = pdf["vec_id"].to_numpy(np.int64)
-            frames = []
-            for qi in range(len(b_ids)):
-                hit = c_sigs == b_sigs[qi]
-                hit &= vec_ids != b_ids[qi]
-                idx = np.nonzero(hit)[0]
-                if idx.size == 0:
-                    continue
-                sims = np.round(Cn[idx] @ b_Qn[qi], 6)
-                take = min(k, idx.size)
-                order = np.lexsort((vec_ids[idx], -sims))[:take]
-                frames.append(pd.DataFrame({
-                    "query_id": np.full(take, b_ids[qi], dtype=np.int64),
-                    "vec_id": vec_ids[idx][order],
-                    "cos_sim": sims[order],
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def same_signature(C, q_sigs):
+        return _signatures(C, planes)[:, None] == q_sigs[None, :]
 
-    partial = embeddings.select("vec_id", "embedding").mapInPandas(
-        kernel, _OUT_SCHEMA)
-    return _rank_merge(partial, k)
+    return _exact_topk(embeddings, q_ids, Q, k, same_signature,
+                       _signatures(Q, planes))
 
 
 EMB_BANDS = 8
@@ -210,7 +176,7 @@ def band_signatures(embeddings: DataFrame, bands: int = EMB_BANDS,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            C = np.array(list(pdf["embedding"]), dtype=np.float64)
+            C = _rows(pdf)
             M = _plane_matrix(total, C.shape[1])
             bits = (C @ M.T) >= 0.0  # (n, total)
             sigs = bits.reshape(len(pdf), bands, planes_per_band) @ weights
@@ -225,8 +191,9 @@ def band_signatures(embeddings: DataFrame, bands: int = EMB_BANDS,
 
 
 def _cos_sim_col(va, vb):
-    """Columnar cosine similarity of two array<double> columns — stays in
-    whole-stage codegen (zip_with product + aggregate sum), no Python."""
+    """Columnar cosine similarity of two array<double> columns, no Python:
+    zip_with product + aggregate sum, both interpreted per row (higher-order
+    functions fall back from whole-stage codegen)."""
     def dot(x, y):
         return F.aggregate(F.zip_with(x, y, lambda a, b: a * b),
                            F.lit(0.0), lambda acc, v: acc + v)
@@ -254,8 +221,9 @@ def embedding_near_duplicates(embeddings: DataFrame,
        sig values, so buckets hold about n/2^r vectors; at a mean of
        ~117 (30k vectors, one run each) wall and peak memory matched the
        self-join's (BENCH_APPENDIX.md);
-    4. exact cosine verify as a pure-codegen columnar expression
-       (_cos_sim_col) after joining the pair ids back to the embeddings.
+    4. exact cosine verify as a columnar expression (_cos_sim_col, an
+       interpreted zip_with/aggregate, no Python) after joining the pair
+       ids back to the embeddings.
 
     Recall: a pair at angle θ collides in one band with (1 - θ/π)^r and
     overall 1-(1-(1-θ/π)^r)^b; near-identical vectors (cos ≥ 0.95) are
@@ -301,29 +269,22 @@ def embedding_near_duplicates_exact(embeddings: DataFrame,
     O(corpus) driver memory and O(n²) compute by construction, so it
     refuses to run above max_rows — it is the small-scale recall baseline
     for embedding_near_duplicates, not the production path."""
-    spark = embeddings.sparkSession
     n = embeddings.count()
     if n > max_rows:
         raise ValueError(
             f"embedding_near_duplicates_exact is all-pairs (n={n} > "
             f"max_rows={max_rows}); use embedding_near_duplicates (banded "
             "LSH) at scale")
-    rows = embeddings.select("vec_id", "embedding").collect()
-    rows.sort(key=lambda r: r.vec_id)
-    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-    V = np.array([r.embedding for r in rows], dtype=np.float64)
-    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((ids, Vn))
+    ids, V = _collect(embeddings)
+    bc = embeddings.sparkSession.sparkContext.broadcast((ids, _unit(V)))
 
     def kernel(batches):
         c_ids, c_Vn = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            B = np.array(list(pdf["embedding"]), dtype=np.float64)
-            Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
             b_ids = pdf["vec_id"].to_numpy(np.int64)
-            sims = np.round(Bn @ c_Vn.T, 6)
+            sims = np.round(_unit(_rows(pdf)) @ c_Vn.T, 6)
             keep = (sims >= threshold) & (b_ids[:, None] < c_ids[None, :])
             bi, ci = np.nonzero(keep)
             if bi.size:
@@ -345,12 +306,19 @@ def auto_centroid_stride(n: int) -> int:
     return max(1, math.isqrt(max(n - 1, 0)) + 1)
 
 
+def _centroid_sims(V: np.ndarray, cent: np.ndarray,
+                   cent_norm: np.ndarray) -> np.ndarray:
+    """(n, nlist) round(cosine, 6) of rows against the centroids."""
+    return np.round((V @ cent.T) / (np.linalg.norm(V, axis=1)[:, None]
+                                    * cent_norm[None, :]), 6)
+
+
 def ivf_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5,
              centroid_stride: int | None = None, nprobe: int = 4) -> DataFrame:
     """(query_id, vec_id, cos_sim, rank) — IVF (inverted-file) approximate
     top-k: the coarse-quantizer scale path alongside lsh_topk.
 
-    Index build (one corpus pass, shuffle-free):
+    Quantizer (driver-side, bounded):
       1. centroids = rows with vec_id % centroid_stride == 0 — a
          deterministic stride sample standing in for k-means training
          (FAISS trains its quantizer on a bounded sample the same way).
@@ -362,81 +330,51 @@ def ivf_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5,
          broadcast once — the corpus itself is never collected; a hard
          MAX_CENTROIDS cap fails fast if an explicit stride would
          collect an unbounded quantizer.
-      2. every vector -> nearest centroid (max rounded cosine, tie ->
-         lowest centroid id) via one BLAS matmul per Arrow batch.
+      2. each query (vec_id < n_queries) probes its nprobe nearest
+         centroids (rounded cosine, tie -> lowest centroid id): an
+         (n_queries, nlist) probe mask, numpy on the driver.
 
-    Query (bounded set, vec_id < n_queries):
-      3. each query probes its nprobe nearest centroids (driver-side
-         numpy over the same broadcast matrix);
-      4. candidates = corpus rows assigned to a probed cell (broadcast
-         hash join on cell — no corpus shuffle), self excluded;
-      5. exact cosine verify as a pure-codegen columnar expression
-         (_cos_sim_col, summation order identical to the DuckDB oracle),
-         then per-query top-k (cos desc, vec_id asc).
+    Search (_exact_topk, one corpus pass, shuffle-free until the merge):
+      3. the candidate mask: a row's nearest centroid (max rounded cosine,
+         tie -> lowest centroid id, one BLAS matmul per Arrow batch) is
+         one of the query's probed cells; the centroids and the probe mask
+         are the broadcast kernel state;
+      4. exact cosine of the candidates, per-query top-k (cos desc,
+         vec_id asc).
 
     Results are exactly brute-force top-k restricted to probed cells —
     the DuckDB oracle (oracles.sql_ivf_topk) mirrors every step
     derivationally; recall-vs-nprobe behavior is covered by
     tests/test_similarity.py on a clustered fixture. At 100 TB: the only
-    shuffles are candidate-sized (window by query_id), assignment is a
-    map-only pass, and skewed cells bound at cell population — nlist
-    ~ sqrt(n) keeps expected cell size ~ sqrt(n)."""
-    spark = embeddings.sparkSession
+    shuffle is the k·n_queries-row merge, and the per-batch cell
+    assignment costs one (batch x nlist) matmul — nlist ~ sqrt(n) keeps
+    it, and the expected cell size, ~ sqrt(n)."""
     if centroid_stride is None:
         centroid_stride = auto_centroid_stride(embeddings.count())
     # limit() bounds the driver transfer BEFORE collecting, so a too-small
     # explicit stride fails fast instead of OOMing the driver
-    cent_rows = (
+    c_ids, cent = _collect(
         embeddings.filter(F.col("vec_id") % centroid_stride == 0)
-        .select("vec_id", "embedding").limit(MAX_CENTROIDS + 1).collect())
-    if len(cent_rows) > MAX_CENTROIDS:
+        .limit(MAX_CENTROIDS + 1))
+    if len(c_ids) > MAX_CENTROIDS:
         raise ValueError(
             f"ivf_topk: centroid_stride={centroid_stride} selects more than "
             f"MAX_CENTROIDS={MAX_CENTROIDS} centroids — the quantizer must "
             f"stay a bounded driver artifact; raise centroid_stride (or "
             f"pass None to derive ceil(sqrt(n)))")
-    cent_rows.sort(key=lambda r: r.vec_id)
-    c_ids = np.array([r.vec_id for r in cent_rows], dtype=np.int64)
-    C = np.array([r.embedding for r in cent_rows], dtype=np.float64)
-    Cnorm = np.linalg.norm(C, axis=1)
-    bc = spark.sparkContext.broadcast((c_ids, C, Cnorm))
+    cent_norm = np.linalg.norm(cent, axis=1)
+    q_ids, Q = _collect(embeddings.filter(F.col("vec_id") < n_queries))
+    # centroids are in id order, so a stable sort (and argmax, which takes
+    # the first maximum) breaks ties on the lowest centroid id
+    nearest = np.argsort(-_centroid_sims(Q, cent, cent_norm), axis=1,
+                         kind="stable")[:, :nprobe]
+    probe = np.zeros((len(q_ids), len(c_ids)), dtype=bool)
+    np.put_along_axis(probe, nearest, True, axis=1)
 
-    def assign(batches):
-        ids_, C_, Cn_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(list(pdf["embedding"]), dtype=np.float64)
-            sims = np.round(
-                (V @ C_.T) / (np.linalg.norm(V, axis=1)[:, None]
-                              * Cn_[None, :]), 6)
-            # argmax picks the first maximal column; ids_ ascending =>
-            # ties resolve to the lowest centroid id (oracle order).
-            cell = ids_[np.argmax(sims, axis=1)]
-            yield pd.DataFrame({"vec_id": pdf["vec_id"], "cell": cell})
+    def in_probed_cell(C, st):
+        cent_, cent_norm_, probe_ = st
+        return probe_[:, np.argmax(_centroid_sims(C, cent_, cent_norm_),
+                                   axis=1)].T
 
-    assignments = embeddings.select("vec_id", "embedding").mapInPandas(
-        assign, "vec_id long, cell long")
-
-    q_ids, Q = _collect_queries(embeddings, n_queries)
-    qsims = np.round((Q @ C.T) / (np.linalg.norm(Q, axis=1)[:, None]
-                                  * Cnorm[None, :]), 6)
-    probe_rows = []
-    for qi in range(len(q_ids)):
-        order = np.lexsort((c_ids, -qsims[qi]))[:nprobe]
-        probe_rows += [(int(q_ids[qi]), int(c_ids[c])) for c in order]
-    probes = spark.createDataFrame(probe_rows, "query_id long, cell long")
-
-    cand = (assignments.join(F.broadcast(probes), "cell")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id"))
-    e = embeddings.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    partial = (
-        cand.join(e, "vec_id")
-        .join(e.select(F.col("vec_id").alias("query_id"),
-                       F.col("v").alias("qv")), "query_id")
-        .withColumn("cos_sim", F.round(_cos_sim_col("qv", "v"), 6))
-        .select("query_id", "vec_id", "cos_sim"))
-    return _rank_merge(partial, k)
+    return _exact_topk(embeddings, q_ids, Q, k, in_probed_cell,
+                       (cent, cent_norm, probe))

@@ -18,8 +18,10 @@ tags; media spans = "geo:<lat>,<lon>" | "node:<id>" | "way:<id>#<role>" |
 "rel:<id>#<role>" | "node:<id>#<role>". Spans are order-significant BY OFFSET
 — we sort, never trust array order (per-row span-sequence invariant).
 
-All functions are pure column expressions: whole-stage codegen end to end,
-zero Python in the decode path.
+All functions are pure column expressions: zero Python in the decode path.
+The span walks use `F.transform`/`F.filter`, higher-order functions whose
+lambdas are interpreted rather than whole-stage codegen (README "Scale
+design").
 """
 
 from __future__ import annotations

@@ -11,8 +11,9 @@ array-intersect Jaccard verify.
   empty intersection, identical arrays and a pair exactly at the
   threshold;
 - plan guards: the signature subtree runs once under `lsh_candidates`,
-  with no join; neither signature plan holds an interpreted fold; and
-  `embedding_near_duplicates` holds one `MapInPandas`.
+  with no join; `shingles` splits each doc's text once; neither signature
+  plan holds an interpreted fold; and `embedding_near_duplicates` holds
+  one `MapInPandas`.
 """
 
 from __future__ import annotations
@@ -233,6 +234,16 @@ def test_lsh_candidates_plan_runs_signatures_once(spark, plan_nodes):
     assert text.count("split(") == 1
     assert "Join" not in text
     assert cands.count() == 10
+
+
+def test_shingles_plan_splits_once(spark, plan_nodes):
+    """A plain explode of the shingle arrays let Catalyst push
+    `size(shingles) > 0` below the projection and re-run the split chain
+    (3 `split(` per plan)."""
+    sh = D.shingles(_hex_docs(spark))
+    text = "\n".join(t for _c, t in plan_nodes(sh))
+    assert text.count("split(") == 1
+    assert sh.count() == 100 * 28
 
 
 def test_simhash_signatures_plan_has_no_fold(spark, plan_nodes):

@@ -10,12 +10,18 @@ Usage: python tools/check_oracles.py [sf_dir] [only_query ...]
 from __future__ import annotations
 
 import datetime as dt
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, ".")
+# the repo root, for this process and for the Python workers Spark starts,
+# so the tool runs from any directory
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 import __spark_entry__ as E  # noqa: E402
 from osm_jigsaw_spark.session import get_spark  # noqa: E402
